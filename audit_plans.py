@@ -770,21 +770,18 @@ def condensed(plan: str, max_lines: int = 24) -> list[str]:
 def audited_plan(spark, name: str, sf_dir: str) -> str:
     """Build query ``name`` cold and return the plan text to audit.
 
-    Cache-order independence (r6 verdict #4): the prepared-plan cache,
-    the job/plan memo, and the PIT plan cache are cleared before every
-    audited build — exactly what bench.py does per query — so the
-    audited plan never depends on which queries ran earlier in the
-    process. For operators whose heavy work runs at construction time
-    (ols_price_model returns a driver-built LocalRelation), the
-    memo-captured BUILD-TIME plans (the sufficient-statistics
-    aggregate) are appended, so the audit sees the HashAggregate that
-    actually computed the answer."""
+    Cache-order independence (r6 verdict #4): every plan cache is
+    dropped (``registry.reset``) before every audited build — exactly
+    what bench.py does per query — so the audited plan never depends
+    on which queries ran earlier in the process. For operators whose
+    heavy work runs at construction time (ols_price_model returns a
+    LocalRelation of collected rows), the memo-captured BUILD-TIME plans
+    (the sufficient-statistics aggregate) are appended, so the audit
+    sees the HashAggregate that actually computed the answer."""
     import feast_hive_spark.registry as registry_mod
-    from feast_hive_spark.plans import memo, pit
+    from feast_hive_spark.plans import memo
 
-    registry_mod.clear_prepared()
-    memo.clear()
-    pit._PLAN_CACHE.clear()
+    registry_mod.reset(spark)
     captured: dict[str, list[str]] = {}
     memo.capture_buildtime_plans(captured)
     try:

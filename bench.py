@@ -66,9 +66,7 @@ import re
 import sys
 import time
 
-from feast_hive_spark import ckpt
 from feast_hive_spark import registry as registry_mod
-from feast_hive_spark.plans import memo, pit
 from feast_hive_spark.registry import REGISTRY
 import feast_hive_spark.registry_analytics  # noqa: F401
 import feast_hive_spark.registry_corpus  # noqa: F401
@@ -788,19 +786,14 @@ def main() -> None:
         fn = REGISTRY[name][0]
         # cold build: pays plan construction + eager build jobs + the
         # hygiene-protocol base-cache rebuild (reported, not graded).
-        # All plan/memo caches are dropped first so `prepare_cold` is
-        # an honest fresh-build number (the burn-in or a prior query
+        # Every plan cache is dropped first so `prepare_cold` is an
+        # honest fresh-build number (the burn-in or a prior query
         # could otherwise have pre-populated them); they refill during
         # this build, so `prepare` then measures the warm-warehouse
-        # prepared-retrieval path the engine actually serves.
-        registry_mod.clear_prepared()
-        memo.clear()
-        pit._PLAN_CACHE.clear()
-        # checkpoint blocks are invisible to clearCache and only fall
-        # to GC timing otherwise (r9 advice slow-leak finding); safe
-        # to free HERE because every cache that could hand a
-        # checkpointed frame back was just dropped above
-        ckpt.release(spark)
+        # prepared-retrieval path the engine actually serves. reset
+        # also frees checkpoint blocks, which clearCache cannot reach
+        # (r9 advice slow-leak finding).
+        registry_mod.reset(spark)
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         cold_runs = [time.perf_counter() - t0]
@@ -812,9 +805,7 @@ def main() -> None:
         # work, not noise, and re-running would triple suite time.
         if cold_runs[0] < 0.5:
             for _ in range(2):
-                registry_mod.clear_prepared()
-                memo.clear()
-                pit._PLAN_CACHE.clear()
+                registry_mod.reset(spark)
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
                 cold_runs.append(time.perf_counter() - t0)
@@ -831,7 +822,6 @@ def main() -> None:
         # first-jobs: eager_jobs ~= prepare_cold - prepare_plan.
         if name in rel20:
             registry_mod.clear_prepared()
-            pit._PLAN_CACHE.clear()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             prepare_plan[name] = round(time.perf_counter() - t0, 3)

@@ -378,9 +378,7 @@ def _time_e2e(spark, name: str, sf_dir: str, runs: "int | None" = None) -> float
     ``SPARK_GRAFT_SCALE_RUNS`` raises it for re-measurement passes
     (r9 verdict #5: single-window 3-run medians left the
     pit_multi_feature_view exponent ambiguous)."""
-    from feast_hive_spark import ckpt
     from feast_hive_spark import registry as registry_mod
-    from feast_hive_spark.plans import memo, pit
 
     if runs is None:
         runs = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "3"))
@@ -389,13 +387,9 @@ def _time_e2e(spark, name: str, sf_dir: str, runs: "int | None" = None) -> float
         # the r6 prepared-plan cache + job/plan memo would otherwise
         # turn every rebuild into a cache hit and the timed cycles
         # would measure only the residual plan — scale exponents need
-        # the FULL build+execute cost at both scales
-        registry_mod.clear_prepared()
-        memo.clear()
-        pit._PLAN_CACHE.clear()
-        # checkpoint blocks accumulate per rebuild cycle otherwise
-        # (invisible to clearCache; safe after the cache drops above)
-        ckpt.release(spark)
+        # the FULL build+execute cost at both scales; reset also frees
+        # the checkpoint blocks each rebuild cycle would accumulate
+        registry_mod.reset(spark)
 
     fn = REGISTRY[name][0]
     # one untimed warmup cycle: codegen + base-scan page cache

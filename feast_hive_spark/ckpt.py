@@ -13,11 +13,11 @@ ContextCleaner notices (the r8/r9 slow-leak findings).
 ``track(df)`` records the frame; ``release(spark)`` frees every
 tracked frame of the CURRENT application. CRITICAL ordering contract:
 a localCheckpoint TRUNCATES lineage, so a released frame cannot be
-recomputed — call ``release`` only after dropping every cache that
-could hand the frame back (``registry.clear_prepared()``,
-``plans.memo.clear()``, ``plans.pit._PLAN_CACHE``), exactly the
-hygiene order bench.py runs between queries. Entries from other
-(stopped) applications are pruned on insert, mirroring plans/memo.py.
+recomputed — ``release`` may run only after every cache that could
+hand the frame back is dropped. ``registry.reset(spark)`` is the one
+place that order is written; call it rather than ``release``
+directly. Entries from other (stopped) applications are pruned on
+insert, mirroring plans/memo.py.
 """
 
 from __future__ import annotations
@@ -91,9 +91,10 @@ def release_scope(spark, snap: set, keep: tuple = ()) -> int:
 
 def release(spark) -> int:
     """Free every tracked frame of ``spark``'s application; returns
-    the number released. See the module docstring for the mandatory
-    cache-clearing order. Connect sessions (no sparkContext) return 0
-    — the documented no-op, matching ``track``'s guard."""
+    the number released. Callers go through ``registry.reset``, which
+    drops the caches first (see the module docstring). Connect
+    sessions (no sparkContext) return 0 — the documented no-op,
+    matching ``track``'s guard."""
     try:
         app = spark.sparkContext.applicationId
     except Exception:

@@ -2136,8 +2136,8 @@ def minhash_band_sweep(
     # under bench loops, and un-released .cache() blocks would
     # accumulate per build (r8 advice finding). The checkpoint blocks
     # themselves are ckpt-tracked (r9 advice: they are invisible to
-    # clearCache and otherwise wait on GC timing) — release with
-    # feast_hive_spark.ckpt.release AFTER dropping the plan caches.
+    # clearCache and otherwise wait on GC timing) — released by
+    # feast_hive_spark.registry.reset.
     # NOTE for bench accounting: this query is BUILD-MATERIALIZED —
     # the returned plan scans a local readout, so its real work shows
     # in prepare_cold, and bench.py flags it as such mechanically.

@@ -9,21 +9,21 @@ inputs re-runs every one of those jobs to produce byte-identical
 results (each is a pure function of the input plan — the r5 verdict's
 "prepare is per-retrieval cost in real use" finding).
 
-This module generalizes the PIT bounds memo: results are keyed by the
-EXACT canonicalized analyzed plan of every input DataFrame
-(``sameResult`` — the identity check Spark's own CacheManager trusts
-for cache substitution, so LocalRelation data participates in the
-comparison) plus the concrete input-file listing (``inputFiles`` —
-``sameResult`` alone treats an overwritten path as unchanged, the
-same blind spot ``cacheTable`` covers with ``refreshByPath``) plus a
-structural token for scalar parameters. Entries are SESSION-scoped
-(r12 — was app-scoped: a ``plan_memo`` hit returns a DataFrame bound
-to the session that built it, so a ``newSession()`` sibling with its
-own confs must never be served another session's frame) and
-LRU-bounded; lookups and stores run under a module lock (concurrent
-builds in one process are supported elsewhere — pit's view lock);
-``clear()`` remains the explicit big hammer after in-place mutations
-that keep file names (none of our writers do).
+Results are keyed by the EXACT canonicalized analyzed plan of every
+input DataFrame (``sameResult`` — the identity check Spark's own
+CacheManager trusts for cache substitution, so LocalRelation data
+participates in the comparison) plus the concrete input-file listing
+(``inputFiles`` — ``sameResult`` alone treats an overwritten path as
+unchanged, the same blind spot ``cacheTable`` covers with
+``refreshByPath``) plus a structural token for scalar parameters.
+Entries are SESSION-scoped (r12 — was app-scoped: a ``plan_memo`` hit
+returns a DataFrame bound to the session that built it, so a
+``newSession()`` sibling with its own confs must never be served
+another session's frame) and FIFO-bounded (hits do not reorder);
+lookups and stores run under a module lock (concurrent builds in one
+process are supported elsewhere — pit's view lock);
+``registry.reset(spark)`` remains the explicit big hammer after
+in-place mutations that keep file names (none of our writers do).
 
 Two entry points:
 
@@ -172,7 +172,7 @@ def _lookup_or_run(
                 # their proxy is GC'd) before touching live-session
                 # entries (r12 advice: a chatty sibling must not evict
                 # a live session's frames). py4j session keys have no
-                # cheap liveness probe; they age out LRU as before.
+                # cheap liveness probe; they age out FIFO as before.
                 # Evicted values are NOT unpersisted deliberately:
                 # plan values are ckpt-tracked localCheckpoint frames
                 # whose blocks are unrecomputable — unpersisting one

@@ -232,95 +232,18 @@ def _validate_entity_df(
         raise EntityDFMissingColumnsError(sorted(expected), missing)
 
 
-# (app_id, analyzed-plan JVM object, bounds Row) — newest last
-_BOUNDS_CACHE: list = []
-_BOUNDS_CACHE_MAX = 8
-
-# Prepared-retrieval plan cache: (app_id, flags tuple, fv structural
-# fingerprints, [entity + per-fv-source analyzed plans], built
-# DataFrame, pinned caches) — newest last. See get_historical_features.
-_PLAN_CACHE: list = []
-_PLAN_CACHE_MAX = 8
-
-
-def _fv_fingerprint(fv: FeatureView) -> tuple:
+def _entity_bounds(sdf: DataFrame, entity_ts_col: str):
+    """min/max(entity_ts) + row count in ONE Spark job (J2 bounds →
+    literal pushdown, fused with the broadcast guard)."""
     return (
-        fv.name,
-        tuple(fv.key_map().items()),
-        tuple(fv.features),
-        fv.ttl_seconds,
-        fv.event_ts_col(),
-        fv.created_ts_col(),
+        sdf.select(F.col(entity_ts_col).alias(_ENTITY_TS))
+        .agg(
+            F.min(_ENTITY_TS).alias("mn"),
+            F.max(_ENTITY_TS).alias("mx"),
+            F.count(F.lit(1)).alias("cnt"),
+        )
+        .first()
     )
-
-
-def _plan_cache_lookup(app_id: str, flags: tuple, fps: tuple, plans: list):
-    for aid, cflags, cfps, cplans, df, pinned in reversed(_PLAN_CACHE):
-        if (
-            aid == app_id
-            and cflags == flags
-            and cfps == fps
-            and all(c.sameResult(p) for c, p in zip(cplans, plans))
-        ):
-            return df, pinned
-    return None
-
-
-class _EvictOnClose:
-    """Rides a RetrievalJob's pinned list: ``close()`` calls
-    ``unpersist()`` on every pinned entry, and this one drops the
-    prepared-plan cache entry whose caches were just released (a later
-    identical retrieval then rebuilds and re-pins instead of returning
-    a plan whose caches are gone)."""
-
-    def __init__(self, df) -> None:
-        self._df = df
-
-    def unpersist(self) -> None:
-        _PLAN_CACHE[:] = [e for e in _PLAN_CACHE if e[4] is not self._df]
-
-
-def _plan_cache_store(
-    app_id: str, flags: tuple, fps: tuple, plans: list, df, pinned: list
-) -> None:
-    pinned.append(_EvictOnClose(df))
-    _PLAN_CACHE[:] = [e for e in _PLAN_CACHE if e[0] == app_id][
-        -(_PLAN_CACHE_MAX - 1):
-    ]
-    _PLAN_CACHE.append((app_id, flags, fps, plans, df, list(pinned)))
-
-
-def _entity_bounds(spark: SparkSession, sdf: DataFrame, entity_ts_col: str):
-    """min/max(entity_ts) + row count in ONE driver job (J2 bounds →
-    literal pushdown, fused with the broadcast guard), memoized per
-    semantically-identical entity frame within a session.
-
-    A warm retrieval loop re-submits the same entity batch (bench r6:
-    the bounds job was ~0.15 s of every PIT rebuild's prepare); the
-    memo recognizes it by EXACT canonicalized-plan equality —
-    ``analyzed().sameResult(...)``, the identical mechanism Spark's
-    own CacheManager trusts for cache substitution, so there is no
-    hash-collision risk and LocalRelation data is part of the
-    comparison. Bounded LRU of 8 plans; entries from other
-    applications are dropped. Like ``spark.catalog.cacheTable``, the
-    memo assumes sources are immutable within a session — mutating a
-    table mid-session invalidates caches and this memo alike."""
-    probe = sdf.select(F.col(entity_ts_col).alias(_ENTITY_TS))
-    app_id = spark.sparkContext.applicationId
-    plan = probe._jdf.queryExecution().analyzed()
-    for aid, cached_plan, row in reversed(_BOUNDS_CACHE):
-        if aid == app_id and cached_plan.sameResult(plan):
-            return row
-    row = probe.agg(
-        F.min(_ENTITY_TS).alias("mn"),
-        F.max(_ENTITY_TS).alias("mx"),
-        F.count(F.lit(1)).alias("cnt"),
-    ).first()
-    _BOUNDS_CACHE[:] = [e for e in _BOUNDS_CACHE if e[0] == app_id][
-        -(_BOUNDS_CACHE_MAX - 1):
-    ]
-    _BOUNDS_CACHE.append((app_id, plan, row))
-    return row
 
 
 def _estimated_bytes(df: DataFrame) -> int:
@@ -343,7 +266,6 @@ def get_historical_features(
     use_max_by: bool = True,
     on_demand_transforms=None,
     broadcast_threshold_rows: int = 1_000_000,
-    plan_cache: bool = True,
     shuffle_small_features_bytes: int = 64 << 20,
 ) -> RetrievalJob:
     """Build the lazy multi-feature-view PIT retrieval job
@@ -392,47 +314,6 @@ def get_historical_features(
     pinned: list[DataFrame] = []
 
     def build() -> DataFrame:
-        # Prepared-retrieval cache (the plan-level analogue of a
-        # prepared statement): a warm serving loop re-issues the same
-        # retrieval shape against the same sources, and the JVM-side
-        # analysis of the multi-join plan (~0.15 s/build measured at
-        # r6) is pure repeated work. Key = structural fv spec + flags
-        # + EXACT canonicalized-plan equality (``sameResult``) of the
-        # entity df and every fv source — the same mechanism and the
-        # same immutable-sources-within-a-session assumption as
-        # ``spark.catalog.cacheTable``. ``RetrievalJob.close()``
-        # evicts the entry alongside unpersisting its pinned caches.
-        # Caveat (shared with every cached Dataset): the returned
-        # plan's PHYSICAL compilation is frozen, so session-conf
-        # changes between identical retrievals don't re-plan it —
-        # pass ``plan_cache=False`` when toggling optimizer confs.
-        app_id = spark.sparkContext.applicationId
-        flags = (
-            bool(full_feature_names),
-            broadcast_entities
-            if isinstance(broadcast_entities, str)
-            else bool(broadcast_entities),
-            tuple(tiebreak_columns),
-            bool(use_max_by),
-            int(broadcast_threshold_rows),
-            int(shuffle_small_features_bytes),
-        )
-        fps = tuple(_fv_fingerprint(fv) for fv in feature_views)
-        plans = [sdf._jdf.queryExecution().analyzed()]
-        for fv in feature_views:
-            plans.append(
-                fv.resolve_df(spark)._jdf.queryExecution().analyzed()
-            )
-        hit = (
-            _plan_cache_lookup(app_id, flags, fps, plans)
-            if plan_cache
-            else None
-        )
-        if hit is not None:
-            df, cached_pinned = hit
-            pinned.extend(cached_pinned)
-            return df
-
         ent = sdf.withColumn(_ENTITY_TS, F.col(entity_ts_col))
         # Entity df is read >= 3x (bounds, per-fv join sides, final
         # assembly) — cache it (replaces the reference's in-memory temp
@@ -451,7 +332,7 @@ def get_historical_features(
         # pruned scan reads one column's pages, the cache build reads
         # them all).  The cache itself materializes during the first
         # execution, which reads it >= 3x and would build it anyway.
-        bounds = _entity_bounds(spark, sdf, entity_ts_col)
+        bounds = _entity_bounds(sdf, entity_ts_col)
         parts = [
             _prepare_fv(
                 fv, spark, bounds, full_feature_names, tiebreak_columns
@@ -548,10 +429,7 @@ def get_historical_features(
         # P4: drop internal columns (the reference's regex column
         # exclusion, hive.py:706) — everything else (incl. passthrough
         # entity columns) survives.
-        result = result.drop(_ENTITY_TS)
-        if plan_cache:
-            _plan_cache_store(app_id, flags, fps, plans, result, pinned)
-        return result
+        return result.drop(_ENTITY_TS)
 
     return RetrievalJob(
         build, on_demand_transforms=on_demand_transforms, pinned=pinned

@@ -25,6 +25,8 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from feast_hive_spark import ckpt
+from feast_hive_spark.plans import memo
 from feast_hive_spark.plans.bcast import sql_broadcast_hint as _sql_broadcast_hint
 from feast_hive_spark.plans.pit import FeatureView, get_historical_features
 from feast_hive_spark.plans.pull import pull_latest
@@ -33,27 +35,38 @@ from feast_hive_spark.sources.tables import ensure_views, read_table
 # name -> (query_fn(spark, sf_dir) -> DataFrame, oracle_sql | None)
 REGISTRY: dict[str, tuple] = {}
 
-# Prepared-retrieval plan cache (generalizes the r5 PIT plan cache in
-# plans/pit.py to every registered query). A registry entry is a pure
-# function of (query name, sf_dir) over immutable sources — the same
-# contract Spark's own CacheManager and every warehouse's prepared-
-# statement / parsed-plan cache assume — so re-invoking it in the same
-# app re-runs plan construction plus every eager build job (quantile
+# Prepared-retrieval plan cache. A registry entry is a pure function
+# of (query name, sf_dir) over immutable sources — the same contract
+# Spark's own CacheManager and every warehouse's prepared-statement /
+# parsed-plan cache assume — so re-invoking it in the same session
+# re-runs plan construction plus every eager build job (quantile
 # probes, bounds collects, iterative rounds) for a byte-identical
 # DataFrame. The cache returns the previously prepared DataFrame
 # instead; the underlying eager work is additionally memoized per
-# input plan in plans/memo.py, so even cache-off rebuilds skip the
+# input plan in plans/memo.py, so even uncached rebuilds skip the
 # repeated driver jobs. First-build (cold) cost is still real and is
-# reported as ``prepare_cold_sec`` by bench.py. Toggle with
-# ``PLAN_CACHE`` / clear with :func:`clear_prepared` after mutating a
-# source (same caveat as ``spark.catalog.cacheTable``).
-PLAN_CACHE = True
+# reported as ``prepare_cold_sec`` by bench.py. Drop the plan
+# caches with :func:`reset` after mutating a source (same caveat as
+# ``spark.catalog.cacheTable``).
 _PREPARED: dict[tuple, DataFrame] = {}
 _PREPARED_MAX = 512
 
 
 def clear_prepared() -> None:
+    """Drop only the prepared plans, keeping plans/memo: a rebuild then
+    replays plan construction with every eager build job memo-served."""
     _PREPARED.clear()
+
+
+def reset(spark: SparkSession) -> int:
+    """Drop the prepared plans and the plan memo, then free ``spark``'s
+    application's checkpoint blocks; returns the number of checkpointed
+    frames released. The order is the only legal one: a released
+    localCheckpoint cannot be recomputed, so every cache that could
+    hand a checkpointed frame back is dropped before ``ckpt.release``."""
+    clear_prepared()
+    memo.clear()
+    return ckpt.release(spark)
 
 
 def register(name: str, oracle: str | None):
@@ -66,11 +79,7 @@ def register(name: str, oracle: str | None):
             # displace the default plan under the same key. Spark
             # Connect sessions (no _jsparkSession -> no applicationId)
             # also bypass: correct, just uncached (r11 Connect note).
-            if (
-                not PLAN_CACHE
-                or kwargs
-                or getattr(spark, "_jsparkSession", None) is None
-            ):
+            if kwargs or getattr(spark, "_jsparkSession", None) is None:
                 return fn(spark, sf_dir, **kwargs)
             # SESSION-keyed (r12 — was app id): a prepared DataFrame
             # is bound to the session that built it, and a

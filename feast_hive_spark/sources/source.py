@@ -206,9 +206,10 @@ class ParquetSource(DataSource):
         self.path = path
 
     def _nano_ts_columns(self) -> list[str]:
-        """Columns stored as parquet TIMESTAMP(NANOS), which Spark's
-        reader rejects outright (PARQUET_TYPE_ILLEGAL). Footer-only
-        check via pyarrow — no data read."""
+        """Columns pyarrow reports as nanosecond timestamps: parquet
+        TIMESTAMP(NANOS), which Spark's reader rejects outright
+        (PARQUET_TYPE_ILLEGAL), but also INT96, which Spark reads as
+        TIMESTAMP. Footer-only check via pyarrow — no data read."""
         try:
             import pyarrow.dataset as ds
 
@@ -230,11 +231,15 @@ class ParquetSource(DataSource):
         if not nano_cols:
             return spark.read.parquet(self.path)
         # read nanos as long, rebuild at microsecond precision JVM-side
-        # (same policy as sources/tables.py:read_table)
+        # (same policy as sources/tables.py:read_table); only columns
+        # Spark surfaces as bigint are nanos — INT96 (Spark's default
+        # outputTimestampType) stays TIMESTAMP and is left alone
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(self.path)
+        dtypes = dict(df.dtypes)
         for c in nano_cols:
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+            if dtypes.get(c) == "bigint":
+                df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
         return df
 
     def get_table_query_string(self) -> str:

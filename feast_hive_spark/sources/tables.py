@@ -51,7 +51,7 @@ _NANO_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
 # testdata is immutable, so reuse is safe. Keyed by SESSION (r12 —
 # was app id): a DataFrame is bound to the session that read it, so a
 # `newSession()` sibling must get its OWN frames or register_views
-# would install views into the WRONG session's catalog. LRU-capped
+# would install views into the WRONG session's catalog. FIFO-capped
 # (16 sessions x 10 tables).
 _DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _DF_CACHE_MAX = 160

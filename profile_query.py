@@ -67,18 +67,13 @@ def main() -> None:
         # memoized frames whose cache mark was just cleared — their
         # consumers then re-execute the shared subtree per run, a
         # state the bench protocol (which clears both) never sees.
-        from feast_hive_spark import ckpt
         from feast_hive_spark import registry as registry_mod
-        from feast_hive_spark.plans import memo, pit
 
         spark.catalog.clearCache()
         for t in TABLES:
             spark.catalog.cacheTable(t)
             spark.table(t).count()
-        registry_mod.clear_prepared()
-        memo.clear()
-        pit._PLAN_CACHE.clear()
-        ckpt.release(spark)
+        registry_mod.reset(spark)
         t0 = time.perf_counter()
         df = REGISTRY[name][0](spark, sf_dir)
         cold = time.perf_counter() - t0

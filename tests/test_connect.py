@@ -109,7 +109,7 @@ def test_memo_degrades_unmemoized_on_connect_shape():
 
 
 def test_registry_prepared_cache_bypassed_on_connect_shape():
-    """The prepared-plan cache keys on applicationId, which Connect
+    """The prepared-plan cache keys on the JVM session, which Connect
     does not expose — a Connect-shaped session must route straight to
     the builder."""
     from feast_hive_spark.registry import register, REGISTRY as REG

@@ -538,21 +538,22 @@ def test_minhash_band_sweep_frees_caches(spark, dup_corpus):
 def test_ckpt_release_frees_checkpoint_blocks(spark, dup_corpus):
     """r10 (r9 advice #5): the sweep's eager readout checkpoint is
     invisible to clearCache and otherwise waits on GC timing;
-    ckpt.release(spark) must return persistent-RDD storage to the
-    pre-build baseline once the plan caches are dropped."""
-    from feast_hive_spark import ckpt
-    from feast_hive_spark.plans import memo
+    registry.reset(spark) must return persistent-RDD storage to the
+    pre-build baseline, and a rebuild after it gives the same answer."""
+    from feast_hive_spark import registry
 
     jsc_sc = spark.sparkContext._jsc.sc()
-    ckpt.release(spark)  # drain frames tracked by earlier tests
+    registry.reset(spark)  # drain frames tracked by earlier tests
     before = jsc_sc.getPersistentRDDs().size()
     out = D.minhash_band_sweep(dup_corpus, "doc_id", "text")
-    assert out.count() == 3
+    rows = sorted(map(tuple, out.collect()))
+    assert len(rows) == 3
     assert jsc_sc.getPersistentRDDs().size() >= before + 1
-    memo.clear()  # the mandatory order: caches first, then release
-    freed = ckpt.release(spark)
-    assert freed >= 1
+    assert registry.reset(spark) >= 1
     assert jsc_sc.getPersistentRDDs().size() <= before
+    again = D.minhash_band_sweep(dup_corpus, "doc_id", "text")
+    assert sorted(map(tuple, again.collect())) == rows
+    registry.reset(spark)
 
 
 def test_cc_collapsed_matches_member_level(spark):

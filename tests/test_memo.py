@@ -122,17 +122,12 @@ def test_registry_prepared_plan_cache(spark, sf_dir):
     assert a is b  # prepared-statement hit: same DataFrame handle
     # different sf_dir must miss (never serve another scale's plan)
     assert len({k[2] for k in R._PREPARED}) >= 1
-    # toggle off -> fresh build
-    R.PLAN_CACHE = False
-    try:
-        c = fn(spark, sf_dir)
-        assert c is not a
-        assert sorted(map(tuple, a.collect())) == sorted(
-            map(tuple, c.collect())
-        )
-    finally:
-        R.PLAN_CACHE = True
-        R.clear_prepared()
+    # cleared -> fresh build
+    R.clear_prepared()
+    c = fn(spark, sf_dir)
+    assert c is not a
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, c.collect()))
+    R.clear_prepared()
 
 
 # --- r6 verdict #8: adversarial identity tests -----------------------

@@ -21,6 +21,7 @@ from feast_hive_spark.plans.pit import (
     get_historical_features,
     infer_event_timestamp_col,
 )
+from feast_hive_spark.sources import ParquetSource
 
 
 def find_asof_record(feature_rows, keys, entity_ts, ttl, event_col="ts", created_col=None):
@@ -345,9 +346,8 @@ def test_to_arrow_nullable_int_fidelity(spark):
 
 
 def test_entity_bounds_memo_exact_and_distinct(spark):
-    """The bounds memo must reuse ONLY semantically-identical entity
-    frames: two different frames get their own bounds, identical
-    rebuilds hit the memo (no second job observable via cache list)."""
+    """Two different entity frames get their own bounds from the one
+    fused min/max/count job."""
     import pandas as pd
 
     from feast_hive_spark.plans import pit as P
@@ -360,65 +360,10 @@ def test_entity_bounds_memo_exact_and_distinct(spark):
     )
     s1 = P.entity_df_to_spark(spark, df1)
     s2 = P.entity_df_to_spark(spark, df2)
-    b1 = P._entity_bounds(spark, s1, "event_timestamp")
-    b2 = P._entity_bounds(spark, s2, "event_timestamp")
+    b1 = P._entity_bounds(s1, "event_timestamp")
+    b2 = P._entity_bounds(s2, "event_timestamp")
     assert b1["mx"].year == 2024 and b2["mx"].year == 2023
     assert b1["cnt"] == b2["cnt"] == 2
-    # identical rebuild -> memo hit: cache length unchanged
-    n = len(P._BOUNDS_CACHE)
-    s1b = P.entity_df_to_spark(spark, df1.copy())
-    b1b = P._entity_bounds(spark, s1b, "event_timestamp")
-    assert b1b == b1
-    assert len(P._BOUNDS_CACHE) == n
-
-
-def test_plan_cache_hit_and_miss(spark):
-    """Prepared-retrieval cache: identical rebuilds return the SAME
-    plan object; changing the entity data, the fv spec, or closing the
-    job forces a rebuild."""
-    import pandas as pd
-
-    from feast_hive_spark.plans import pit as P
-    from feast_hive_spark.plans.pit import FeatureView, get_historical_features
-
-    feat = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "user_id": [1, 1, 2],
-                "ts": pd.to_datetime(["2024-01-01", "2024-01-05", "2024-01-02"]),
-                "v": [10.0, 20.0, 30.0],
-            }
-        )
-    )
-    ent = pd.DataFrame(
-        {"user_id": [1, 2], "event_timestamp": pd.to_datetime(["2024-01-06", "2024-01-03"])}
-    )
-
-    def mkfv(ttl=0):
-        return FeatureView(
-            name="fv", source=feat, join_keys=["user_id"], features=["v"],
-            ttl_seconds=ttl, event_timestamp_column="ts",
-        )
-
-    j1 = get_historical_features(spark, ent, [mkfv()])
-    d1 = j1.to_spark_df()
-    j2 = get_historical_features(spark, ent.copy(), [mkfv()])
-    d2 = j2.to_spark_df()
-    assert d2 is d1  # memo hit on an identical rebuild
-    # different fv spec -> miss
-    j3 = get_historical_features(spark, ent, [mkfv(ttl=86400)])
-    assert j3.to_spark_df() is not d1
-    # different entity data -> miss
-    ent2 = ent.assign(event_timestamp=pd.to_datetime(["2024-01-04", "2024-01-03"]))
-    j4 = get_historical_features(spark, ent2, [mkfv()])
-    assert j4.to_spark_df() is not d1
-    # results still correct on the memoized plan
-    got = {r["user_id"]: r["v"] for r in d2.collect()}
-    assert got == {1: 20.0, 2: 30.0}
-    # close() evicts: next identical build is a fresh plan
-    j2.close()
-    j5 = get_historical_features(spark, ent, [mkfv()])
-    assert j5.to_spark_df() is not d1
 
 
 def test_concurrent_plan_builds_bind_correct_views(spark):
@@ -527,12 +472,9 @@ def test_small_feature_side_drops_forced_broadcast(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        free = get_historical_features(
-            spark, entity_pdf, [fv], plan_cache=False
-        ).to_spark_df()
+        free = get_historical_features(spark, entity_pdf, [fv]).to_spark_df()
         forced = get_historical_features(
-            spark, entity_pdf, [fv], plan_cache=False,
-            shuffle_small_features_bytes=0,
+            spark, entity_pdf, [fv], shuffle_small_features_bytes=0,
         ).to_spark_df()
         free_plan = free._jdf.queryExecution().executedPlan().toString()
         forced_plan = (
@@ -576,8 +518,7 @@ def test_duplicate_output_names_fall_back_to_chain(spark):
                     event_timestamp_column="ts"),
     ]
     got = get_historical_features(
-        spark, entity_pdf, fvs, full_feature_names=False,
-        plan_cache=False,
+        spark, entity_pdf, fvs, full_feature_names=False
     ).to_df()
     assert list(got.columns).count("score") == 2
     by_k = got.sort_values("k").reset_index(drop=True)
@@ -587,7 +528,80 @@ def test_duplicate_output_names_fall_back_to_chain(spark):
     assert scores.iloc[:, 1].tolist() == [10.0, 20.0]
     # and full_feature_names=True keeps the one-statement path working
     named = get_historical_features(
-        spark, entity_pdf, fvs, full_feature_names=True,
-        plan_cache=False,
+        spark, entity_pdf, fvs, full_feature_names=True
     ).to_df()
     assert {"a__score", "b__score"} <= set(named.columns)
+
+
+def _feature_parquet(path, values):
+    """Write a two-key feature file with UTC microsecond timestamps
+    (no nanos column, so only the retrieval path is under test)."""
+    pd.DataFrame(
+        {
+            "k": [1, 2],
+            "ts": pd.to_datetime(["2024-01-09", "2024-01-09"], utc=True),
+            "v": values,
+        }
+    ).to_parquet(path, coerce_timestamps="us")
+
+
+_ENTITY = pd.DataFrame(
+    {"k": [1, 2], "event_timestamp": [datetime(2024, 1, 10, 12, 0)] * 2}
+)
+
+
+def _parquet_fv(path):
+    return FeatureView(
+        name="fv",
+        source=ParquetSource(path, event_timestamp_column="ts"),
+        join_keys=["k"],
+        features=["v"],
+    )
+
+
+def _values(df):
+    return [r["v"] for r in sorted(df.collect(), key=lambda r: r["k"])]
+
+
+def test_sibling_session_retrieval_is_bound_to_that_session(spark, tmp_path):
+    """A newSession() sibling (own confs, own temp views) gets a plan
+    built in its own session, never the first session's DataFrame."""
+    path = str(tmp_path / "feat.parquet")
+    _feature_parquet(path, [1.0, 2.0])
+    fv = _parquet_fv(path)
+    d1 = get_historical_features(spark, _ENTITY, [fv]).to_spark_df()
+    sibling = spark.newSession()
+    d2 = get_historical_features(sibling, _ENTITY, [fv]).to_spark_df()
+    assert d1.sparkSession is spark
+    assert d2.sparkSession is sibling
+    assert _values(d2) == [1.0, 2.0]
+
+
+def test_overwritten_parquet_source_serves_new_values(spark, tmp_path):
+    """Overwriting a ParquetSource path with new part files is seen by
+    the next identical retrieval, with no close() in between."""
+    d = tmp_path / "feat"
+    d.mkdir()
+    _feature_parquet(str(d / "part-a.parquet"), [1.0, 2.0])
+    fv = _parquet_fv(str(d))
+    first = get_historical_features(spark, _ENTITY, [fv]).to_spark_df()
+    assert _values(first) == [1.0, 2.0]
+    (d / "part-a.parquet").unlink()
+    _feature_parquet(str(d / "part-b.parquet"), [10.0, 20.0])
+    second = get_historical_features(spark, _ENTITY, [fv]).to_spark_df()
+    assert _values(second) == [10.0, 20.0]
+
+
+def test_parquet_source_reads_spark_written_timestamps(spark, tmp_path):
+    """Spark writes timestamps as INT96 by default; pyarrow reports
+    INT96 as timestamp[ns], but Spark reads it back as TIMESTAMP, so
+    the nanos-as-long conversion must not touch it."""
+    assert spark.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+    path = str(tmp_path / "feat")
+    spark.createDataFrame(
+        pd.DataFrame(
+            {"k": [1, 2], "ts": [datetime(2024, 1, 9)] * 2, "v": [1.0, 2.0]}
+        )
+    ).write.parquet(path)
+    got = get_historical_features(spark, _ENTITY, [_parquet_fv(path)])
+    assert _values(got.to_spark_df()) == [1.0, 2.0]

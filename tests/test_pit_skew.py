@@ -101,11 +101,7 @@ def test_disabled_group_limit_ships_the_whale(spark, whale):
     old = spark.conf.get(key, None)
     spark.conf.set(key, "-1")
     try:
-        # plan_cache=False: the point is to observe a FRESH physical
-        # compilation under the toggled optimizer conf — the prepared-
-        # plan cache (correctly) returns the frozen compiled plan of
-        # the earlier identical retrieval otherwise.
-        df, rows = _run(spark, whale, use_max_by=False, plan_cache=False)
+        df, rows = _run(spark, whale, use_max_by=False)
     finally:
         if old is None:
             spark.conf.unset(key)

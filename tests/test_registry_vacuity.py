@@ -111,9 +111,8 @@ def test_trio_serves_from_report_when_built(spark, sf_dir):
     from feast_hive_spark.plans import memo
 
     # a previously-prepared frame would serve without rebuilding and
-    # mask the routing under test — drop BOTH caches
-    memo.clear()
-    registry_mod.clear_prepared()
+    # mask the routing under test — drop the plan caches
+    registry_mod.reset(spark)
     assert RA._esr_g_peek(spark, sf_dir) is None, (
         "peek built state or memo not cleared"
     )
