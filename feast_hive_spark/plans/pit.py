@@ -1,7 +1,8 @@
 """Point-in-time (as-of) join — the engine's flagship query program.
 
 Re-expression of the reference's 195-line Jinja2 HiveQL template
-(feast_hive/hive.py:527-721) as a composed DataFrame plan. Semantics
+(feast_hive/hive.py:527-721) as one generated Spark SQL statement over
+prepared DataFrame inputs. Semantics
 (prose spec at hive.py:567-582, :639-644, :656-658, :681-684,
 :701-704): for each entity row ``(keys…, entity_ts)`` and each feature
 view, among feature rows with equal keys and
@@ -28,17 +29,19 @@ Spark-first plan (SURVEY §2.3 J1-J6, §4):
    struct(event_ts, created_ts, tiebreaks))`` grouped by
    ``(keys…, entity_ts)``. Partial aggregation runs MAP-SIDE, so a
    whale entity key collapses to one row per partition before the
-   shuffle — skew-immune at 100 TB (a row_number window, even with
-   WindowGroupLimit's streaming top-1, still funnels every matching
-   row of a hot key through one shuffle partition; it remains
-   available via ``use_max_by=False``). We join on the raw
-   ``(keys…, entity_ts)`` tuple, NOT the collision-prone
-   separator-less string rid of hive.py:537-544.
+   shuffle — skew-immune at 100 TB (a row_number window without
+   WindowGroupLimit's streaming top-1 funnels every matching row of a
+   hot key through one shuffle partition; tests/test_pit_skew.py
+   shows both). We join on the raw ``(keys…, entity_ts)`` tuple, NOT
+   the collision-prone separator-less string rid of hive.py:537-544.
 5. **Broadcast the (deduped) entity side** when small: the feature
    table — the 100 TB side — then streams through a BroadcastHashJoin
    with zero shuffle; the only shuffle in the whole per-fv pipeline is
-   the argmax hash partition. When the entity df is huge, fall back
-   to letting AQE pick sort-merge (``broadcast_entities=False``).
+   the argmax hash partition. Above ``_BROADCAST_MAX_ROWS`` (1M)
+   entity rows the hints are dropped and AQE picks sort-merge.
+6. **The whole retrieval is ONE ``spark.sql`` statement** (one parse,
+   one analysis pass), built from one template like the reference's
+   (hive.py:527-721) — one nesting level per feature view.
 
 Physical plan per feature view: Scan(feature, pushed time filter) ->
 BroadcastHashJoin(entity keys) + range condition ->
@@ -55,7 +58,7 @@ from datetime import timedelta
 from typing import Mapping, Optional, Sequence, Union
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,7 +72,13 @@ _ENTITY_TS = "__entity_ts"
 _EVENT_TS = "__event_ts"
 _CREATED_TS = "__created_ts"
 
-# Guards the overwrite-three-views-then-sql window in _join_fv_sql:
+# The broadcast policy of get_historical_features: hint the entity-side
+# joins as broadcasts up to this many entity rows ...
+_BROADCAST_MAX_ROWS = 1_000_000
+# ... unless every feature side is estimated below this size.
+_SMALL_FEATURES_BYTES = 64 << 20
+
+# Guards the overwrite-views-then-sql window in _join_fvs_sql:
 # concurrent plan builds on one SparkSession must not interleave the
 # __pit_sql_* temp-view bindings.
 _SQL_VIEW_LOCK = threading.Lock()
@@ -261,50 +270,32 @@ def get_historical_features(
     feature_views: Sequence[FeatureView],
     full_feature_names: bool = False,
     entity_event_timestamp_col: Optional[str] = None,
-    broadcast_entities: "bool | str" = "auto",
     tiebreak_columns: Sequence[str] = (),
-    use_max_by: bool = True,
     on_demand_transforms=None,
-    broadcast_threshold_rows: int = 1_000_000,
-    shuffle_small_features_bytes: int = 64 << 20,
 ) -> RetrievalJob:
     """Build the lazy multi-feature-view PIT retrieval job
     (reference entry point 1, hive.py:192-269).
 
     ``tiebreak_columns``: extra descending-order columns applied after
-    (event_ts, created_ts) in each feature view's window, making row
+    (event_ts, created_ts) in each feature view's argmax, making row
     choice deterministic under full timestamp ties (the reference fans
     tied rows out through an inner join, hive.py:685-696 — a bug-shaped
     behavior we deliberately do not reproduce; see SURVEY §7 risks).
 
-    ``broadcast_entities``: ``"auto"`` (default) broadcasts the entity
-    join side only while the entity row count stays under
-    ``broadcast_threshold_rows`` — the count is one cheap job against
-    the already-cached entity df, and the guardrail means a huge
-    entity df cannot OOM every executor by default; beyond it, AQE
-    picks sort-merge with the range filter applied post-join.
-    ``True``/``False`` force either physical path (both oracle-
-    verified to agree).
-
-    ``shuffle_small_features_bytes`` (r10): the second arm of the
-    "auto" policy. Forcing the entity-side broadcasts is the 100 TB
-    shape (the feature table — the big side — streams through the
-    joins with ZERO shuffle), but every broadcast exchange is a
-    separate driver-collect job on EVERY execution of the plan, and
-    when the feature side is itself small that per-exec job floor
-    costs more than the shuffle the broadcast avoids (measured at
-    sf0.1: flagship exec 0.195 s / 3 jobs forced-broadcast vs
-    0.109 s / 2 jobs unhinted — the broadcast builds were pure
-    scheduler floor). So under "auto", when EVERY feature view's
-    bounds-filtered, column-pruned side is estimated below this
-    threshold (Catalyst's own sizeInBytes statistic — no job), the
-    explicit broadcast hints are dropped and Catalyst plans the joins
-    freely, exactly as it would any similarly-sized query (it may
-    still auto-broadcast sides under its own threshold). At cluster
-    scale a real feature table blows past 64 MB and the forced-
-    broadcast path is untouched. ``0`` disables the check (always
-    follow the row-count guard alone); explicit ``True``/``False``
-    bypass it entirely.
+    Broadcast policy (no option; both physical shapes return the same
+    rows). The entity-side joins are hinted as broadcasts while the
+    entity row count stays at or under ``_BROADCAST_MAX_ROWS`` — the
+    count rides the bounds job, and the guard means a huge entity df
+    cannot OOM every executor; above it, AQE picks sort-merge with the
+    range filter applied post-join. The hints are also dropped (r10)
+    when EVERY feature view's bounds-filtered, column-pruned side is
+    estimated below ``_SMALL_FEATURES_BYTES`` (Catalyst's own
+    sizeInBytes statistic — no job): every broadcast exchange is a
+    separate driver-collect job on every execution of the plan, and on
+    a small feature side that job floor costs more than the shuffle it
+    avoids (measured at sf0.1: flagship exec 0.195 s / 3 jobs
+    forced-broadcast vs 0.109 s / 2 jobs unhinted). At cluster scale a
+    real feature table blows past 64 MB and keeps the broadcast shape.
     """
     sdf = entity_df_to_spark(spark, entity_df)
     entity_ts_col = infer_event_timestamp_col(sdf, entity_event_timestamp_col)
@@ -335,101 +326,39 @@ def get_historical_features(
         bounds = _entity_bounds(sdf, entity_ts_col)
         parts = [
             _prepare_fv(
-                fv, spark, bounds, full_feature_names, tiebreak_columns
+                fv, idx, spark, bounds, full_feature_names, tiebreak_columns
             )
-            for fv in feature_views
+            for idx, fv in enumerate(feature_views)
         ]
-        if broadcast_entities == "auto":
-            do_broadcast = bounds["cnt"] <= broadcast_threshold_rows
-            # Second arm (r10, see docstring): when every feature side
-            # is small by Catalyst's own estimate, the per-execution
-            # broadcast-build jobs cost more than the shuffle they
-            # avoid — drop the hints and let Catalyst plan freely.
-            if do_broadcast and shuffle_small_features_bytes and parts:
-                try:
-                    if all(
-                        _estimated_bytes(p.feat)
-                        < shuffle_small_features_bytes
-                        for p in parts
-                    ):
-                        do_broadcast = False
-                except Exception:
-                    pass  # stats unavailable: keep the broadcast path
-        else:
-            do_broadcast = bool(broadcast_entities)
-        result = ent
+        do_broadcast = bounds["cnt"] <= _BROADCAST_MAX_ROWS
+        if do_broadcast:
+            try:
+                if all(
+                    _estimated_bytes(p.feat) < _SMALL_FEATURES_BYTES
+                    for p in parts
+                ):
+                    do_broadcast = False
+            except Exception:
+                pass  # stats unavailable: keep the broadcast path
 
         # A1 hoisted: build the deduped entity-key side ONCE per
         # distinct join-key tuple. Catalyst's exchange reuse does not
         # fire across the per-view branches (fresh expr IDs per
         # resolve defeat the canonical match), so without this a
         # multi-view retrieval re-runs the same dedup shuffle +
-        # broadcast build per view; a shared cached DataFrame makes
-        # the second and later views read the materialized keys.
-        tuples: dict[tuple, int] = {}
-        for fv in feature_views:
-            t = tuple(fv.key_map().values())
-            tuples[t] = tuples.get(t, 0) + 1
+        # broadcast build per view. Cached even when single-use (r6):
+        # the deduped keys are read once per EXECUTION, and without the
+        # cache every re-execution replays the dedup exchange +
+        # broadcast build. Bounded by the deduped entity-key count and
+        # released by RetrievalJob.close() like every plan-pinned cache.
         ekeys_by_tuple: dict[tuple, DataFrame] = {}
-        for t, uses in tuples.items():
-            ek = ent.select(*t, _ENTITY_TS).dropDuplicates()
-            # cache even single-use key sets (r6): the deduped keys are
-            # read once per EXECUTION, and without the cache every
-            # re-execution of the retrieval replays the dedup exchange
-            # + broadcast build. Bounded by the deduped entity-key
-            # count (the broadcast guard's own bound) and released by
-            # RetrievalJob.close() like every plan-pinned cache.
-            ek = ek.cache()
-            pinned.append(ek)
-            ekeys_by_tuple[t] = ek
-
-        # SQL-path eligibility (r10, ADVICE r9#3): the one-statement
-        # assembly references accumulated columns as qualified
-        # ``a.`col``` at every nesting level, so any duplicate in the
-        # would-be output (two views emitting the same feature name
-        # under full_feature_names=False, or a feature shadowing an
-        # entity column) fails analysis with AMBIGUOUS_REFERENCE at
-        # the NEXT level. The DataFrame chain carries duplicate
-        # columns through silently (positional resolution), matching
-        # the pre-r9 behavior — route collisions there.
-        all_out = [n for p in parts for n in p.out_names]
-        final_cols = list(ent.columns) + all_out
-        sql_safe = len(final_cols) == len(set(final_cols))
-        if use_max_by and parts and all(p.fast for p in parts) and sql_safe:
-            # All views take the default keyed-max_by shape: assemble
-            # the WHOLE retrieval as one spark.sql statement (one
-            # parse + one analysis pass; the per-view loop below pays
-            # both per view).
-            result = _join_fvs_sql(
-                spark,
-                ent,
-                parts,
-                [
-                    ekeys_by_tuple[tuple(fv.key_map().values())]
-                    for fv in feature_views
-                ],
-                do_broadcast,
-            )
-        else:
-            for fv, part in zip(feature_views, parts):
-                result = _join_feature_view(
-                    result,
-                    ent,
-                    fv,
-                    spark,
-                    bounds,
-                    full_feature_names,
-                    do_broadcast,
-                    tiebreak_columns,
-                    use_max_by,
-                    ekeys=ekeys_by_tuple[tuple(fv.key_map().values())],
-                    part=part,
-                    force_chain=not sql_safe,
-                )
-        # P4: drop internal columns (the reference's regex column
-        # exclusion, hive.py:706) — everything else (incl. passthrough
-        # entity columns) survives.
-        return result.drop(_ENTITY_TS)
+        for part in parts:
+            t = tuple(part.entity_cols)
+            if t not in ekeys_by_tuple:
+                ek = ent.select(*t, _ENTITY_TS).dropDuplicates().cache()
+                pinned.append(ek)
+                ekeys_by_tuple[t] = ek
+        return _join_fvs_sql(spark, ent, parts, ekeys_by_tuple, do_broadcast)
 
     return RetrievalJob(
         build, on_demand_transforms=on_demand_transforms, pinned=pinned
@@ -440,49 +369,48 @@ def get_historical_features(
 class _FvPart:
     """Per-feature-view prepared inputs for the join step: the
     projected+bounds-filtered feature frame plus the SQL fragments the
-    fast path assembles. ``fast`` marks default-shape eligibility
-    (keyed fv with features under the max_by strategy)."""
+    assembly needs. Features travel under positional internal names
+    (``cols``) and get their user-visible ``out_names`` back only in
+    the outermost SELECT, so colliding output names never meet inside
+    the statement."""
 
     feat: DataFrame
     entity_cols: list
+    cols: list
     out_names: list
     created_ts: Optional[str]
     tiebreaks: list
     range_cond: str
-    fast: bool
 
 
 def _prepare_fv(
     fv: FeatureView,
+    idx: int,
     spark: SparkSession,
     bounds,
     full_feature_names: bool,
     tiebreak_columns: Sequence[str],
 ) -> _FvPart:
     key_map = fv.key_map()  # feature col -> entity col
-    entity_cols = list(key_map.values())
     event_ts = fv.event_ts_col()
     created_ts = fv.created_ts_col()
 
     feat = fv.resolve_df(spark)
+    tiebreaks = [c for c in tiebreak_columns if c in feat.columns]
+    cols = [f"__pit_o{idx}_{i}" for i in range(len(fv.features))]
     # Subquery projection (hive.py:584-591): event/created ts under
     # internal names, join keys renamed to entity-side names, features
-    # under their output names. Pure projection — column pruning
-    # reaches the scan. ONE selectExpr call: plan CONSTRUCTION here is
-    # dominated by py4j round-trips (~0.4 ms each; a Column-API
-    # projection costs one per col/alias, ~190 per feature view
-    # profiled at r6), and a warm retrieval loop pays it per call.
+    # under positional internal names. Pure projection — column
+    # pruning reaches the scan. ONE selectExpr call: plan CONSTRUCTION
+    # here is dominated by py4j round-trips (~0.4 ms each; a
+    # Column-API projection costs one per col/alias, ~190 per feature
+    # view profiled at r6), and a warm retrieval loop pays it per call.
     sel = [f"{_bt(event_ts)} AS {_EVENT_TS}"]
     if created_ts:
         sel.append(f"{_bt(created_ts)} AS {_CREATED_TS}")
-    for fcol, ecol in key_map.items():
-        sel.append(f"{_bt(fcol)} AS {_bt(ecol)}")
-    out_names = []
-    for feat_name in fv.features:
-        out = fv.output_name(feat_name, full_feature_names)
-        out_names.append(out)
-        sel.append(f"{_bt(feat_name)} AS {_bt(out)}")
-    sel.extend(_bt(c) for c in tiebreak_columns if c in feat.columns)
+    sel.extend(f"{_bt(fcol)} AS {_bt(ecol)}" for fcol, ecol in key_map.items())
+    sel.extend(f"{_bt(name)} AS {col}" for name, col in zip(fv.features, cols))
+    sel.extend(_bt(c) for c in tiebreaks)
     feat = feat.selectExpr(*sel)
 
     # J2: literal coarse bounds — ttl==0 -> upper bound only
@@ -512,149 +440,41 @@ def _prepare_fv(
 
     return _FvPart(
         feat=feat,
-        entity_cols=entity_cols,
-        out_names=out_names,
+        entity_cols=list(key_map.values()),
+        cols=cols,
+        out_names=[fv.output_name(f, full_feature_names) for f in fv.features],
         created_ts=created_ts,
-        tiebreaks=[c for c in tiebreak_columns if c in feat.columns],
+        tiebreaks=tiebreaks,
         range_cond=range_cond,
-        fast=bool(entity_cols and out_names),
     )
-
-
-def _join_feature_view(
-    acc: DataFrame,
-    ent: DataFrame,
-    fv: FeatureView,
-    spark: SparkSession,
-    bounds,
-    full_feature_names: bool,
-    broadcast_entities: bool,
-    tiebreak_columns: Sequence[str],
-    use_max_by: bool = True,
-    ekeys: Optional[DataFrame] = None,
-    part: Optional[_FvPart] = None,
-    force_chain: bool = False,
-) -> DataFrame:
-    if part is None:
-        part = _prepare_fv(
-            fv, spark, bounds, full_feature_names, tiebreak_columns
-        )
-    feat = part.feat
-    entity_cols = part.entity_cols
-    out_names = part.out_names
-    created_ts = part.created_ts
-    range_cond = part.range_cond
-
-    # A1: dedup entity join side (shared across views via the caller's
-    # per-key-tuple cache; rebuilt here only for direct callers).
-    if ekeys is None:
-        ekeys = ent.select(*entity_cols, _ENTITY_TS).dropDuplicates()
-
-    if use_max_by and part.fast and not force_chain:
-        # Fast path for the default shape (keyed fv with features,
-        # max_by strategy): J3+J4/J5+J6 as ONE ``spark.sql`` statement.
-        # The step-by-step chain below costs ~6 eagerly-analyzed
-        # Dataset creations per feature view (~60 ms/view of py4j +
-        # repeated analysis, profiled at r8); the parsed text is one
-        # round trip + one analysis pass and produces the identical
-        # logical plan (broadcast hints stand in for the F.broadcast
-        # wrappers; the stable temp views keep the cached ekeys/entity
-        # plans, so cache reuse is unchanged).
-        return _join_fvs_sql(
-            spark, acc, [part], [ekeys], broadcast_entities
-        )
-
-    if broadcast_entities:
-        ekeys = F.broadcast(ekeys)
-
-    # J3: equi join on keys (entity-less fv -> cross of the deduped
-    # timestamps, matching the rid=cast(entity_ts) semantics of
-    # hive.py:543-544) + range predicate.
-    if entity_cols:
-        joined = feat.join(ekeys, on=entity_cols, how="inner")
-    else:
-        joined = feat.crossJoin(ekeys)
-    joined = joined.filter(range_cond)
-
-    # W1 replaces J4/J5/A3/A4. Two equivalent physical strategies:
-    #
-    # max_by (default): argmax of the feature struct over the
-    # (event_ts, created_ts, tiebreaks) ordering key as a hash
-    # aggregate. Partial aggregation runs map-side, so a whale entity
-    # key (one key matching millions of feature rows) reduces to one
-    # row per partition BEFORE the shuffle — skew-immune at 100 TB.
-    #
-    # row_number window: same result; Spark's WindowGroupLimit rewrite
-    # inserts a partial top-1 BEFORE the shuffle too (load-verified in
-    # test_pit_skew.py), so on this engine version both strategies are
-    # skew-immune; on engines without the rewrite the window path ships
-    # every hot-key row through one shuffle partition (the negative-
-    # control test demonstrates it by disabling the rewrite). Kept
-    # selectable for comparison/debugging.
-    # ordering keys as micros longs, not raw timestamps: the max_by /
-    # row_number comparator runs per joined row, and long compares
-    # codegen tighter than timestamp ones (measured on the flagship
-    # bench query); unix_micros is a monotone transform, so the argmax
-    # and NULL placement are unchanged
-    ord_sql = [f"unix_micros({_EVENT_TS})"]
-    if created_ts:
-        ord_sql.append(f"unix_micros({_CREATED_TS})")
-    ord_sql.extend(_bt(c) for c in tiebreak_columns if c in joined.columns)
-    ord_key = "struct(" + ", ".join(ord_sql) + ")"
-    if use_max_by:
-        if out_names:
-            payload = "struct(" + ", ".join(_bt(n) for n in out_names) + ")"
-            agg = F.expr(f"max_by({payload}, {ord_key})").alias("__best")
-        else:
-            agg = F.expr("count(1)").alias("__n")
-        latest = joined.groupBy(*entity_cols, _ENTITY_TS).agg(agg)
-        if out_names:
-            latest = latest.selectExpr(
-                *[_bt(c) for c in entity_cols],
-                _ENTITY_TS,
-                *[f"__best.{_bt(n)} AS {_bt(n)}" for n in out_names],
-            )
-        else:
-            latest = latest.select(*entity_cols, _ENTITY_TS)
-    else:
-        w = Window.partitionBy(*entity_cols, _ENTITY_TS).orderBy(
-            *[F.expr(c).desc() for c in ord_sql]
-        )
-        latest = (
-            joined.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(*entity_cols, _ENTITY_TS, *out_names)
-        )
-
-    # J6: left join assembly on the raw key tuple; NULL features for
-    # unmatched entity rows, duplicate entity rows preserved. The fv
-    # result is bounded by the deduped entity-key count, so when the
-    # entity side is broadcastable the assembly side is too — skipping
-    # the sort-merge exchange on the (possibly large) entity df.
-    if broadcast_entities:
-        latest = F.broadcast(latest)
-    return acc.join(latest, on=[*entity_cols, _ENTITY_TS], how="left")
 
 
 def _join_fvs_sql(
     spark: SparkSession,
     acc: DataFrame,
     parts: Sequence[_FvPart],
-    ekeys_list: Sequence[DataFrame],
-    broadcast_entities: bool,
+    ekeys_by_tuple: Mapping[tuple, DataFrame],
+    broadcast: bool,
 ) -> DataFrame:
-    """J3+W1+J6 for one or more default-shape (keyed max_by) feature
-    views, assembled as ONE ``spark.sql`` statement — the per-level
-    subquery nests where the step-by-step chain accumulated
-    DataFrames, so an n-view retrieval pays ONE parse + ONE analysis
-    pass instead of n (r9: pit_multi_feature_view cold build −1 sql
-    −2 temp views vs the r8 per-view statements). Semantically
-    identical to the chain: same equi join on the deduped entity
-    keys, same range predicate, same ``max_by(struct(features),
-    struct(ordering))`` argmax, same USING-style left assembly with
-    join keys leading the schema at every level — the old
-    ``acc.join(latest, on=[...])`` also emitted
-    ``[keys, _ENTITY_TS, acc-rest, features]``.
+    """J3+W1+J6 for every feature view, assembled as ONE ``spark.sql``
+    statement: one nesting level per view, so an n-view retrieval pays
+    ONE parse + ONE analysis pass (r9: pit_multi_feature_view cold
+    build −1 sql −2 temp views vs per-view statements). Per view: equi
+    join on the deduped entity keys (a CROSS JOIN of the deduped
+    timestamps for an entity-less view, matching the
+    rid=cast(entity_ts) semantics of hive.py:543-544), the range
+    predicate, the ``max_by(struct(features), struct(ordering))``
+    argmax (a plain GROUP BY for a view with no features), and a
+    USING-style left assembly with the join keys leading the schema —
+    each level emits ``[keys, _ENTITY_TS, acc-rest, features]``. The
+    outermost SELECT drops ``_ENTITY_TS`` and restores the
+    user-visible feature names, which may repeat at top level.
+
+    Ordering keys are micros longs, not raw timestamps: the max_by
+    comparator runs per joined row, and long compares codegen tighter
+    than timestamp ones (measured on the flagship bench query);
+    unix_micros is a monotone transform, so the argmax and NULL
+    placement are unchanged.
 
     Manual reused view names instead of spark.sql's {df} placeholders,
     for two measured reasons: the placeholder formatter creates AND
@@ -670,12 +490,10 @@ def _join_fvs_sql(
     temp view with one of these names is overwritten by plan
     construction), and the returned plan resolved the views at
     analysis time, so later overwrites cannot reach it."""
-    latest_hint = "/*+ BROADCAST(latest) */ " if broadcast_entities else ""
-    ek_hint = "/*+ BROADCAST(ek) */ " if broadcast_entities else ""
+    latest_hint = "/*+ BROADCAST(latest) */ " if broadcast else ""
+    ek_hint = "/*+ BROADCAST(ek) */ " if broadcast else ""
     acc_cols = list(acc.columns)
-    # dedupe shared ekeys frames (multi-view retrievals share the
-    # per-key-tuple cached dedup) so each registers exactly once
-    ek_views: dict[int, str] = {}
+    out_name: dict[str, str] = {}  # internal feature col -> output name
     with _SQL_VIEW_LOCK:
         # bind_sql_view: stable engine-reserved names under classic
         # py4j (eager analysis; cache substitution intact), UNIQUE
@@ -683,59 +501,67 @@ def _join_fvs_sql(
         # would let a later rebind silently redirect this plan
         # (r9 ADVICE).
         acc_sql = bind_sql_view(acc, "__pit_sql_acc")
-        for idx, (part, ekeys) in enumerate(zip(parts, ekeys_list)):
+        # one view per distinct key tuple: views sharing a tuple share
+        # its cached dedup
+        ek_views = {
+            t: bind_sql_view(ek, f"__pit_sql_ek{i}")
+            for i, (t, ek) in enumerate(ekeys_by_tuple.items())
+        }
+        for idx, part in enumerate(parts):
             fview = bind_sql_view(part.feat, f"__pit_sql_f{idx}")
-            ekv = ek_views.get(id(ekeys))
-            if ekv is None:
-                ekv = bind_sql_view(ekeys, f"__pit_sql_ek{len(ek_views)}")
-                ek_views[id(ekeys)] = ekv
-            keys_sql = ", ".join(_bt(c) for c in part.entity_cols)
-            ord_sql = [f"unix_micros({_EVENT_TS})"]
-            if part.created_ts:
-                ord_sql.append(f"unix_micros({_CREATED_TS})")
-            ord_sql.extend(_bt(c) for c in part.tiebreaks)
-            ord_key = "struct(" + ", ".join(ord_sql) + ")"
-            payload = (
-                "struct(" + ", ".join(_bt(n) for n in part.out_names) + ")"
-            )
-            best = ", ".join(
-                f"__best.{_bt(n)} AS {_bt(n)}" for n in part.out_names
-            )
-            feats = ", ".join(f"latest.{_bt(n)}" for n in part.out_names)
+            ekv = ek_views[tuple(part.entity_cols)]
+            out_name.update(zip(part.cols, part.out_names))
+            keys = [_bt(c) for c in part.entity_cols]
+            group = ", ".join([*keys, _ENTITY_TS])
+            if keys:
+                ek_join = f"JOIN {ekv} ek USING ({', '.join(keys)})"
+            else:
+                ek_join = f"CROSS JOIN {ekv} ek"
+            matched = f"""FROM {fview} f {ek_join}
+                WHERE {part.range_cond}
+                GROUP BY {group}"""
+            if part.cols:
+                ord_sql = [f"unix_micros({_EVENT_TS})"]
+                if part.created_ts:
+                    ord_sql.append(f"unix_micros({_CREATED_TS})")
+                ord_sql.extend(_bt(c) for c in part.tiebreaks)
+                best = ", ".join(f"__best.{c} AS {c}" for c in part.cols)
+                latest = f"""
+              SELECT {group}, {best}
+              FROM (
+                SELECT {ek_hint}{group},
+                       max_by(struct({', '.join(part.cols)}),
+                              struct({', '.join(ord_sql)})) AS __best
+                {matched}
+              )"""
+            else:
+                latest = f"SELECT {ek_hint}{group} {matched}"
             acc_rest = [
-                f"a.{_bt(c)}"
+                c
                 for c in acc_cols
                 if c not in part.entity_cols and c != _ENTITY_TS
             ]
-            proj = ", ".join([keys_sql, _ENTITY_TS, *acc_rest, feats])
-            acc_sql = f"""
+            proj = ", ".join(
+                [
+                    group,
+                    *(f"a.{_bt(c)}" for c in acc_rest),
+                    *(f"latest.{c}" for c in part.cols),
+                ]
+            )
+            acc_sql = f"""(
             SELECT {latest_hint}{proj}
             FROM {acc_sql} a
-            LEFT JOIN (
-              SELECT {keys_sql}, {_ENTITY_TS}, {best}
-              FROM (
-                SELECT {ek_hint}{keys_sql}, {_ENTITY_TS},
-                       max_by({payload}, {ord_key}) AS __best
-                FROM {fview} f
-                JOIN {ekv} ek USING ({keys_sql})
-                WHERE {part.range_cond}
-                GROUP BY {keys_sql}, {_ENTITY_TS}
-              )
-            ) latest
-            USING ({keys_sql}, {_ENTITY_TS})
-            """
-            if idx + 1 < len(parts):
-                acc_sql = f"({acc_sql})"
-            # track the accumulated schema without a py4j round trip:
-            # the USING join emits [keys, ts, acc-rest, features]
-            acc_cols = (
-                list(part.entity_cols)
-                + [_ENTITY_TS]
-                + [
-                    c
-                    for c in acc_cols
-                    if c not in part.entity_cols and c != _ENTITY_TS
-                ]
-                + list(part.out_names)
-            )
-        return spark.sql(acc_sql)
+            LEFT JOIN ({latest}) latest
+            USING ({group})
+            )"""
+            # track the accumulated schema without a py4j round trip
+            acc_cols = [*part.entity_cols, _ENTITY_TS, *acc_rest, *part.cols]
+        # P4: drop internal columns (the reference's regex column
+        # exclusion, hive.py:706) — everything else (incl. passthrough
+        # entity columns) survives under its user-visible name.
+        out = ", ".join(
+            f"{c} AS {_bt(out_name[c])}" if c in out_name else _bt(c)
+            for c in acc_cols
+            if c != _ENTITY_TS
+        )
+        return spark.sql(f"SELECT {out} FROM {acc_sql}")

@@ -8,8 +8,9 @@ parquet tables. Column names are aliased identically on both sides
 (the driver's compare sorts columns by name before hashing).
 
 Determinism notes shared by both sides:
-- ``events.ts`` is parquet TIMESTAMP(NANOS); Spark reads it via
-  nanosAsLong + ``timestamp_micros(ns div 1000)`` and every oracle
+- ``events.ts`` is parquet TIMESTAMP(NANOS) in older testdata drops;
+  Spark then reads it via nanosAsLong + ``timestamp_micros(ns div
+  1000)`` (``sources/tables.read_parquet_micros``) and every oracle
   casts ``CAST(ts AS TIMESTAMP)`` (ns->us truncation) — identical us
   values.
 - Every window/limit query carries a total order (explicit tiebreak

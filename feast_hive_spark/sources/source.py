@@ -29,6 +29,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from feast_hive_spark.sources.tables import read_parquet_micros
 from feast_hive_spark.types import spark_to_hive_type, spark_to_value_type, ValueType
 
 
@@ -205,42 +206,8 @@ class ParquetSource(DataSource):
         super().__init__(name=name or path, **kwargs)
         self.path = path
 
-    def _nano_ts_columns(self) -> list[str]:
-        """Columns pyarrow reports as nanosecond timestamps: parquet
-        TIMESTAMP(NANOS), which Spark's reader rejects outright
-        (PARQUET_TYPE_ILLEGAL), but also INT96, which Spark reads as
-        TIMESTAMP. Footer-only check via pyarrow — no data read."""
-        try:
-            import pyarrow.dataset as ds
-
-            schema = ds.dataset(self.path, format="parquet").schema
-        except Exception:  # noqa: BLE001 - fall through to Spark's own error
-            return []
-        import pyarrow as pa
-
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-
     def _load(self, spark: SparkSession) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        nano_cols = self._nano_ts_columns()
-        if not nano_cols:
-            return spark.read.parquet(self.path)
-        # read nanos as long, rebuild at microsecond precision JVM-side
-        # (same policy as sources/tables.py:read_table); only columns
-        # Spark surfaces as bigint are nanos — INT96 (Spark's default
-        # outputTimestampType) stays TIMESTAMP and is left alone
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(self.path)
-        dtypes = dict(df.dtypes)
-        for c in nano_cols:
-            if dtypes.get(c) == "bigint":
-                df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-        return df
+        return read_parquet_micros(spark, self.path)
 
     def get_table_query_string(self) -> str:
         return f"parquet.`{self.path}`"

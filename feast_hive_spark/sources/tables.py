@@ -1,10 +1,12 @@
 """Canonical loader for the driver's testdata tables.
 
-Handles one physical-format wart: ``events.parquet`` stores its ``ts``
-column as parquet TIMESTAMP(NANOS), which Spark's vectorized reader
-rejects (PARQUET_TYPE_ILLEGAL). We read it with
+Handles one physical-format wart: older testdata drops store
+``events.ts`` as parquet TIMESTAMP(NANOS), which Spark's vectorized
+reader rejects (PARQUET_TYPE_ILLEGAL); newer drops store
+TIMESTAMP(MICROS). ``read_parquet_micros`` checks the footer and only
+for a real NANOS column reads with
 ``spark.sql.legacy.parquet.nanosAsLong=true`` (a runtime conf) and
-rebuild the timestamp at microsecond precision JVM-side —
+rebuilds the timestamp at microsecond precision JVM-side —
 ``timestamp_micros(ns div 1000)`` — which stays inside whole-stage
 codegen and keeps the scan fully distributed (no driver-side Arrow
 detour). DuckDB oracles cast the same column with
@@ -34,11 +36,48 @@ TABLES = [
     "embeddings",
 ]
 
-# Columns that MAY be stored as parquet TIMESTAMP(NANOS) depending on
-# the testdata generation vintage: read as long, rebuild. Newer testdata
-# writes plain TIMESTAMP(MICROS); we detect the actual loaded dtype and
-# only convert when the reader surfaced a long.
-_NANO_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
+
+def nanos_ts_columns(path: str) -> list[str]:
+    """Columns stored as parquet TIMESTAMP(NANOS) — the ones Spark can
+    read only as bigint. Footer-only check via pyarrow, no data read.
+    INT96 (Spark's default outputTimestampType), which pyarrow would
+    otherwise also report as ``timestamp[ns]``, is coerced to micros
+    here: Spark reads it natively as TIMESTAMP."""
+    try:
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        fmt = ds.ParquetFileFormat(coerce_int96_timestamp_unit="us")
+        schema = ds.dataset(path, format=fmt).schema
+    except Exception:  # noqa: BLE001 - fall through to Spark's own error
+        return []
+    return [
+        f.name
+        for f in schema
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+
+
+def read_parquet_micros(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with every TIMESTAMP(NANOS) column
+    rebuilt as a microsecond TIMESTAMP.
+
+    Only when the footer shows such a column is
+    ``spark.sql.legacy.parquet.nanosAsLong`` set on the session — and
+    then deliberately NOT restored: the physical parquet reader
+    re-derives its hadoopConf from the session conf at ACTION time, so
+    unsetting it here would make the (lazy) frame itself throw
+    PARQUET_TYPE_ILLEGAL at execution. Cost of keeping it: a later
+    caller-owned read of a TIMESTAMP(NANOS) parquet in this session
+    surfaces bigint instead of erroring."""
+    nano_cols = nanos_ts_columns(path)
+    if nano_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    for c in nano_cols:
+        # integer div: float division would lose precision above 2^53 ns
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
 
 
 # Memoized per (SESSION, sf_dir, table): every caller in one session
@@ -71,22 +110,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = _DF_CACHE.get(key)
     if hit is not None:
         return hit
-    nano_cols = _NANO_TS_COLS.get(name, [])
-    if nano_cols:
-        # Deliberately NOT restored after the read: the physical
-        # parquet reader re-derives its hadoopConf from the session
-        # conf at ACTION time, so unsetting the flag here would make
-        # the (lazy) events frame itself throw PARQUET_TYPE_ILLEGAL
-        # at execution on nanos-vintage testdata. Cost of keeping it:
-        # a later caller-owned read of a TIMESTAMP(NANOS) parquet in
-        # this session surfaces bigint instead of erroring.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    dtypes = dict(df.dtypes)
-    for c in nano_cols:
-        # integer div: float division would lose precision above 2^53 ns
-        if dtypes.get(c) == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    df = read_parquet_micros(spark, f"{sf_dir}/{name}.parquet")
     # Opt-in (bench): the sf<=0.1 testdata files are single-row-group
     # parquet, so file splitting cannot raise scan parallelism past
     # ~1 task/table no matter the split confs — an artifact of tiny

@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feast_hive_spark.sources.tables import nanos_ts_columns
+
+
 def _events_schema(ts_as_long: bool) -> T.StructType:
     return T.StructType(
         [
@@ -33,39 +36,12 @@ def _events_schema(ts_as_long: bool) -> T.StructType:
     )
 
 
-def _ts_is_nanos(sf_dir: str) -> bool:
-    """Footer-only sniff: does events.parquet store ts as logical
-    TIMESTAMP(NANOS) (which Spark can only read as long)?
-
-    pyarrow reports BOTH logical-nanos and legacy physical-INT96
-    columns as ``timestamp[ns]`` — but Spark reads INT96 natively as
-    a timestamp (it is the legacy Spark/Hive encoding) and only the
-    INT64-backed NANOS annotation needs the read-as-long fallback.
-    The r10 tier replay hit exactly this: Spark-written tier datasets
-    carry INT96, the old arrow-type-only sniff said "nanos", and the
-    long-typed schema failed the scan. Check the PHYSICAL type too."""
-    try:
-        import pyarrow.dataset as ds
-
-        dset = ds.dataset(f"{sf_dir}/events.parquet", format="parquet")
-        if str(dset.schema.field("ts").type) != "timestamp[ns]":
-            return False
-        md = next(iter(dset.get_fragments())).metadata
-        for i in range(md.num_columns):
-            col = md.schema.column(i)
-            if col.name == "ts":
-                return col.physical_type != "INT96"
-        return True
-    except Exception:  # noqa: BLE001 - assume modern micros layout
-        return False
-
-
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (one file = one
     micro-batch locally; on a cluster this would be a kafka source
     with the same downstream plan)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    nanos = _ts_is_nanos(sf_dir)
+    nanos = "ts" in nanos_ts_columns(f"{sf_dir}/events.parquet")
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Layout-aware source path (r10 finding, caught by the tier

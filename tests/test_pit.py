@@ -14,6 +14,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from feast_hive_spark.plans import pit
 from feast_hive_spark.plans.pit import (
     EntityDFMissingColumnsError,
     EntityTimestampInferenceException,
@@ -450,11 +451,11 @@ def test_multi_view_different_key_tuples_single_statement(spark):
     assert got["s_rank"].tolist() == [3.0, 9.0, 3.0]
 
 
-def test_small_feature_side_drops_forced_broadcast(spark):
-    """r10 auto-policy second arm: with every feature side under the
-    size threshold the forced broadcast hints are dropped (Catalyst
-    plans freely); with the threshold disabled (0) the explicit
-    broadcast shape is restored. Catalyst's own auto-broadcast is
+def test_small_feature_side_drops_forced_broadcast(spark, monkeypatch):
+    """r10 broadcast-policy second arm: with every feature side under
+    the size threshold the forced broadcast hints are dropped (Catalyst
+    plans freely); with the threshold at 0 the explicit broadcast
+    shape is restored. Catalyst's own auto-broadcast is
     silenced for the probe so the two regimes are distinguishable at
     test scale."""
     base = datetime(2024, 1, 10, 12, 0)
@@ -473,9 +474,8 @@ def test_small_feature_side_drops_forced_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         free = get_historical_features(spark, entity_pdf, [fv]).to_spark_df()
-        forced = get_historical_features(
-            spark, entity_pdf, [fv], shuffle_small_features_bytes=0,
-        ).to_spark_df()
+        monkeypatch.setattr(pit, "_SMALL_FEATURES_BYTES", 0)
+        forced = get_historical_features(spark, entity_pdf, [fv]).to_spark_df()
         free_plan = free._jdf.queryExecution().executedPlan().toString()
         forced_plan = (
             forced._jdf.queryExecution().executedPlan().toString()
@@ -491,12 +491,12 @@ def test_small_feature_side_drops_forced_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_duplicate_output_names_fall_back_to_chain(spark):
+def test_duplicate_output_names_keep_positions(spark):
     """ADVICE r9 #3: two views emitting the SAME output feature name
     under full_feature_names=False used to fail the one-statement SQL
     assembly with AMBIGUOUS_REFERENCE at the second nesting level.
-    Collisions now route to the DataFrame chain, which carries
-    duplicate columns positionally (the pre-r9 behavior)."""
+    Features now travel under positional internal names and get their
+    (repeated) output names back only in the outermost SELECT."""
     base = datetime(2024, 1, 10, 12, 0)
     entity_pdf = pd.DataFrame(
         {"k": [1, 2], "event_timestamp": [base, base]}
@@ -526,11 +526,110 @@ def test_duplicate_output_names_fall_back_to_chain(spark):
     scores = by_k.loc[:, by_k.columns == "score"]
     assert scores.iloc[:, 0].tolist() == [1.0, 2.0]
     assert scores.iloc[:, 1].tolist() == [10.0, 20.0]
-    # and full_feature_names=True keeps the one-statement path working
+    # and full_feature_names=True gives distinct names
     named = get_historical_features(
         spark, entity_pdf, fvs, full_feature_names=True
     ).to_df()
     assert {"a__score", "b__score"} <= set(named.columns)
+
+
+_B = datetime(2024, 1, 10, 12, 0)
+_H = timedelta(hours=1)
+
+
+@pytest.mark.parametrize(
+    "shape,names,rows",
+    [
+        (
+            # a feature shares its name with a passthrough entity column
+            "shadow_entity_col",
+            [("a", "score"), ("a", "order_id")],
+            [
+                (1, _B, 100, 1.0, 7),
+                (2, _B, 101, 2.0, 8),
+                (2, _B + 2 * _H, 102, 2.5, 9),
+                (3, _B, 103, None, None),
+            ],
+        ),
+        (
+            # a keyed view with no features ahead of a keyed view
+            "featureless_plus_keyed",
+            [("a", "score")],
+            [
+                (1, _B, 100, 1.0),
+                (2, _B, 101, 2.0),
+                (2, _B + 2 * _H, 102, 2.5),
+                (3, _B, 103, None),
+            ],
+        ),
+        (
+            # an entity-less (global) view ahead of a keyed view
+            "entityless_plus_keyed",
+            [("g", "gv"), ("a", "score")],
+            [
+                (1, _B, 100, 5.0, 1.0),
+                (2, _B, 101, 5.0, 2.0),
+                (2, _B + 2 * _H, 102, 6.0, 2.5),
+                (3, _B, 103, 5.0, None),
+            ],
+        ),
+    ],
+    ids=["shadow_entity_col", "featureless_plus_keyed", "entityless_plus_keyed"],
+)
+def test_view_shapes_assemble_in_one_statement(spark, shape, names, rows):
+    """Output names that collide with an entity column, a view with no
+    features and a view with no join keys all assemble in the one SQL
+    statement: columns in order and values per entity row, under both
+    full_feature_names settings."""
+    entity_pdf = pd.DataFrame(
+        {
+            "k": [1, 2, 2, 3],
+            "event_timestamp": [_B, _B, _B + 2 * _H, _B],
+            "order_id": [100, 101, 102, 103],
+        }
+    )
+    keyed = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "k": [1, 2, 2],
+                "ts": [_B - _H, _B - _H, _B + _H],
+                "score": [1.0, 2.0, 2.5],
+                "order_id": [7, 8, 9],
+            }
+        )
+    )
+    other = spark.createDataFrame(
+        pd.DataFrame({"k": [1, 2], "ts": [_B - 2 * _H] * 2, "x": [1.0, 2.0]})
+    )
+    glob = spark.createDataFrame(
+        pd.DataFrame({"ts": [_B - _H, _B + _H], "gv": [5.0, 6.0]})
+    )
+
+    def fv(name, source, keys, features):
+        return FeatureView(
+            name=name, source=source, join_keys=keys, features=features,
+            event_timestamp_column="ts",
+        )
+
+    fvs = {
+        "shadow_entity_col": [fv("a", keyed, ["k"], ["score", "order_id"])],
+        "featureless_plus_keyed": [
+            fv("n", other, ["k"], []),
+            fv("a", keyed, ["k"], ["score"]),
+        ],
+        "entityless_plus_keyed": [
+            fv("g", glob, [], ["gv"]),
+            fv("a", keyed, ["k"], ["score"]),
+        ],
+    }[shape]
+    for full in (False, True):
+        df = get_historical_features(
+            spark, entity_pdf, fvs, full_feature_names=full
+        ).to_spark_df()
+        assert df.columns == ["k", "event_timestamp", "order_id"] + [
+            f"{v}__{f}" if full else f for v, f in names
+        ]
+        assert sorted(tuple(r) for r in df.collect()) == rows
 
 
 def _feature_parquet(path, values):
@@ -604,4 +703,53 @@ def test_parquet_source_reads_spark_written_timestamps(spark, tmp_path):
         )
     ).write.parquet(path)
     got = get_historical_features(spark, _ENTITY, [_parquet_fv(path)])
+    assert _values(got.to_spark_df()) == [1.0, 2.0]
+
+
+def test_int96_parquet_source_leaves_nanos_conf_alone(spark, tmp_path):
+    """Reading a Spark-written (INT96) ParquetSource must not switch
+    nanosAsLong on: a TIMESTAMP(NANOS) file read later in the same
+    session would then silently surface as bigint."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    sibling = spark.newSession()  # own confs, untouched by other tests
+    assert sibling.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+    path = str(tmp_path / "feat")
+    sibling.createDataFrame(
+        pd.DataFrame(
+            {"k": [1, 2], "ts": [datetime(2024, 1, 9)] * 2, "v": [1.0, 2.0]}
+        )
+    ).write.parquet(path)
+    before = sibling.conf.get(key)
+    got = get_historical_features(sibling, _ENTITY, [_parquet_fv(path)])
+    assert _values(got.to_spark_df()) == [1.0, 2.0]
+    assert sibling.conf.get(key) == before
+
+
+def test_parquet_source_reads_nanos_timestamps(spark, tmp_path):
+    """A parquet TIMESTAMP(NANOS) column, which Spark's reader rejects
+    on its own, reads back through ParquetSource as a TIMESTAMP
+    truncated to the microsecond."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    ns = 1_704_758_400_123_456_789  # 2024-01-09 00:00:00.123456789 UTC
+    path = str(tmp_path / "feat.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "k": [1, 2],
+                "ts": pa.array([ns, ns], pa.timestamp("ns", tz="UTC")),
+                "v": [1.0, 2.0],
+            }
+        ),
+        path,
+    )
+    assert pq.read_schema(path).field("ts").type.unit == "ns"
+    fv = _parquet_fv(path)
+    df = fv.resolve_df(spark)
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    micros = {r[0] for r in df.select(F.unix_micros("ts")).collect()}
+    assert micros == {ns // 1000}
+    got = get_historical_features(spark, _ENTITY, [fv])
     assert _values(got.to_spark_df()) == [1.0, 2.0]

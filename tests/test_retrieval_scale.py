@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from feast_hive_spark.plans import pit
 from feast_hive_spark.plans.pit import FeatureView, get_historical_features
 from feast_hive_spark.plans.pull import pull_latest
 from feast_hive_spark.retrieval import RetrievalJob
@@ -72,16 +73,21 @@ def test_pull_latest_date_partition_pruning(spark, tmp_path):
     assert by_k[2] == 3.0  # day-3 row beats day-2 for k=2
 
 
-@pytest.mark.parametrize("broadcast_entities,threshold", [
-    (True, 1_000_000),
-    (False, 1_000_000),
-    ("auto", 1_000_000),  # 3 entities -> broadcasts
+@pytest.mark.parametrize("broadcast,max_rows", [
+    (True, 1_000_000),    # size arm off -> forced broadcast hints
+    ("auto", 1_000_000),  # small feature side -> hints dropped
     ("auto", 1),          # guardrail trips -> sort-merge fallback
 ])
-def test_pit_broadcast_and_smj_paths_agree(spark, broadcast_entities, threshold):
-    """broadcast_entities=False is the huge-entity-df fallback (same
-    results through the sort-merge path); "auto" must agree on both
-    sides of its row-count guardrail."""
+def test_pit_broadcast_and_smj_paths_agree(
+    spark, monkeypatch, broadcast, max_rows
+):
+    """The broadcast policy's three physical shapes return the same
+    rows: forced entity-side broadcasts, hints dropped for a small
+    feature side, and the sort-merge fallback past the row-count
+    guardrail (``max_rows`` is ``pit._BROADCAST_MAX_ROWS``)."""
+    monkeypatch.setattr(pit, "_BROADCAST_MAX_ROWS", max_rows)
+    if broadcast is True:
+        monkeypatch.setattr(pit, "_SMALL_FEATURES_BYTES", 0)
     base = datetime(2024, 1, 10, 12, 0)
     entity_pdf = pd.DataFrame(
         {
@@ -109,10 +115,7 @@ def test_pit_broadcast_and_smj_paths_agree(spark, broadcast_entities, threshold)
         event_timestamp_column="ts",
     )
     got = (
-        get_historical_features(
-            spark, entity_pdf, [fv], broadcast_entities=broadcast_entities,
-            broadcast_threshold_rows=threshold,
-        )
+        get_historical_features(spark, entity_pdf, [fv])
         .to_df()
         .set_index("k")["v"]
     )
