@@ -45,10 +45,6 @@ for _k in range(8):
         )
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    return _C.T @ block @ _C
-
-
 class _BitReader:
     """MSB-first reader over entropy-coded data with 0xFF00 byte
     unstuffing; stops at any non-RST marker."""
@@ -153,13 +149,6 @@ class _Huff:
                 idx = self.val_ptr[ln] + code - self.min_code[ln]
                 return self.symbols[idx]
         raise ValueError("corrupt JPEG: invalid Huffman code")
-
-
-def _extend(v: int, t: int) -> int:
-    """DC/AC coefficient sign extension (JPEG F.2.2.1)."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
 def decode(data: bytes) -> np.ndarray:

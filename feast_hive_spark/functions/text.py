@@ -310,15 +310,6 @@ def minhash_signature(hashes: Column) -> Column:
     return F.array(*parts)
 
 
-def token_hashes(col: str) -> Column:
-    """48-bit hashes of each token (duplicates kept — SimHash weights
-    by term frequency)."""
-    w = f"split(lower({col}), '{TOKEN_RE_SQL}')"
-    return F.expr(
-        f"transform({w}, t -> cast(conv(substr(md5(t), 1, 12), 16, 10) as bigint))"
-    )
-
-
 def bigrams_of(w: Column) -> Column:
     """Word bigram array from an ALREADY-MATERIALIZED token array
     column, duplicates kept (repetition weighting).

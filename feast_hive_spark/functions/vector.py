@@ -108,22 +108,6 @@ def duck_sign_bucket(vec: str, planes: list[list[float]]) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
-def sign_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit p = 1 iff dot(vec, plane_p) >= 0.
-    Hyperplane literals are folded into the plan as array constants —
-    evaluated per row JVM-side, no shuffle, no UDF."""
-    bits = []
-    for p, plane in enumerate(planes):
-        arr = F.array(*[F.lit(v) for v in plane])
-        bits.append(
-            F.when(dot(vec, arr) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
 def sign_planes(k: int, dim: int, seed: str = "jl") -> list[list[float]]:
     """Deterministic ±1 projection matrix rows (Achlioptas 2003's
     database-friendly JL variant, sign-only case): entry (p, d) is

@@ -903,86 +903,6 @@ def decontaminate(
 
 # --- near-dup clustering / survivor selection ---------------------------
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components over a near-dup pair graph + canonical
-    survivor selection — the step that turns pairwise dedup output
-    into "keep THIS doc, drop those".
-
-    Algorithm: iterative min-label propagation (each node repeatedly
-    adopts the minimum label among itself and its neighbors) until a
-    fixpoint — converges in O(component diameter) rounds, and near-dup
-    components are overwhelmingly tiny/star-shaped, so 2-4 rounds in
-    practice. Each round is one shuffle join + one aggregate; labels
-    are persisted per round and the convergence check rides the same
-    job as the label update (count of changed labels). At true graph
-    scale you would upgrade to the large-star/small-star algorithm
-    (same primitive ops, better worst-case rounds); for dedup graphs
-    the plain propagation IS the right tool.
-
-    Output: (doc_id, component_id, is_canonical) for every node that
-    appears in a pair; component_id = min doc id in the component."""
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
-    # The pair graph is usually FAR smaller than the corpus that
-    # produced it; size the per-round shuffles to the graph, not to
-    # the session default, so each of the O(diameter) iterations pays
-    # a handful of tasks instead of a full-width shuffle. (One count
-    # against the cached edges; at genuinely large edge counts the
-    # session parallelism is kept.)
-    n_edges = sym.count()
-    spark = pairs.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    small = max(2, min(target, n_edges // 50_000 + 2))
-    if small < target:
-        wide = sym
-        sym = sym.repartition(small).cache()
-        sym.count()  # materialize the narrow copy, then drop the wide one
-        wide.unpersist()
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .cache()
-    )
-    for _ in range(max_iters):
-        nbr_min = (
-            sym.join(labels, sym.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-                (F.col("nbr_label") < F.col("label")).alias("__changed"),
-            )
-            .cache()
-        )
-        changed = new_labels.filter(F.col("__changed")).count()
-        labels.unpersist()
-        labels = new_labels.drop("__changed")
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("component_id"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
-    )
-
-
 def _driver_union_find(
     pairs: DataFrame, rows, id_a: str, id_b: str
 ) -> DataFrame:
@@ -1140,16 +1060,19 @@ def connected_components_star(
     max_iters: int = 50,
     small_graph_threshold: int = 200_000,
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    contraction — same output contract as :func:`connected_components`
-    ((doc_id, component_id, is_canonical) for every node in a pair)
-    but with O(log diameter) rounds instead of O(diameter).
+    """Connected components over a near-dup pair graph + canonical
+    survivor selection — the step that turns pairwise dedup output
+    into "keep THIS doc, drop those". Output: (doc_id, component_id,
+    is_canonical) for every node that appears in a pair;
+    component_id = min doc id in the component.
 
-    Plain min-label propagation moves the minimum ONE hop per round,
-    so a path component of length N needs N rounds — past ``max_iters``
-    it silently returns un-converged labels.  Star contraction halves
-    the effective diameter every round, making deep chains safe; this
-    is the default used by the registry's ``dedup_components``.
+    Algorithm: alternating large-star/small-star contraction, in
+    O(log diameter) rounds. Plain min-label propagation moves the
+    minimum ONE hop per round, so a path component of length N would
+    need N rounds; star contraction halves the effective diameter
+    every round, making deep chains safe. This is the only components
+    path: the registry's ``dedup_components`` uses it directly or via
+    ``connected_components_collapsed``.
 
     Small-graph fast path: iterative algorithms pay O(rounds) job
     rounds of scheduler+shuffle latency regardless of data size, and a

@@ -78,7 +78,7 @@ def pagerank(
     A fixed small ``iters`` (default 3) is the production shape for
     score features ("2-3 hops of influence"); convergence-to-epsilon
     would just be this loop with a delta check like
-    connected_components'.
+    connected_components_star's fixpoint.
 
     Small-graph fast path (same guardrail pattern as
     connected_components_star): a LIMIT-probe under

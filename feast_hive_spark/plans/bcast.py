@@ -62,9 +62,11 @@ def gate_bytes() -> int:
 
 
 def _estimated_bytes(df: DataFrame) -> int:
-    # Catalyst's own statistic (see plans/pit.py:_estimated_bytes) —
-    # duplicated 1-liner rather than imported so this module stays
-    # import-cycle-free for every registry module.
+    """Catalyst's own size estimate for a plan (driver-side, no job):
+    file-relation bytes for scans, materialized storage size for
+    cached relations, pass-through for filters/projections without
+    CBO column stats — the same statistic autoBroadcastJoinThreshold
+    consults."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 

@@ -16,6 +16,11 @@ Spark-first plan (SURVEY §2.3 J1-J6, §4):
 1. The entity df is ingested natively (``spark.createDataFrame`` /
    ``spark.sql``) — the reference's dominant cost, a chunked
    row-literal ``INSERT INTO`` upload (hive.py:394-460), disappears.
+   Nothing stands in for its temp table (hive.py:532): the entity df
+   and its deduped key sides are read uncached, so a retrieval pins no
+   storage and needs no release. Caching them only added jobs (13
+   against 8 for a 2-view retrieval with a 600-row pandas entity) at
+   the same latency.
 2. **Coarse bounds pushdown (kept, manual — J2):** Catalyst cannot
    derive data-dependent bounds across a join, so we compute
    ``min/max(entity_ts)`` with one tiny driver job and inject them as
@@ -62,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feast_hive_spark.plans.bcast import _estimated_bytes
 from feast_hive_spark.retrieval import RetrievalJob
 from feast_hive_spark.sources.tables import bind_sql_view
 from feast_hive_spark.sources.source import DataSource
@@ -255,15 +261,6 @@ def _entity_bounds(sdf: DataFrame, entity_ts_col: str):
     )
 
 
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's own size estimate for a plan (driver-side, no job):
-    file-relation bytes for scans, materialized storage size for
-    cached relations, pass-through for filters/projections without
-    CBO column stats — the same statistic autoBroadcastJoinThreshold
-    consults."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
 def get_historical_features(
     spark: SparkSession,
     entity_df: Union[DataFrame, pd.DataFrame, str],
@@ -300,29 +297,15 @@ def get_historical_features(
     sdf = entity_df_to_spark(spark, entity_df)
     entity_ts_col = infer_event_timestamp_col(sdf, entity_event_timestamp_col)
     _validate_entity_df(sdf, feature_views, entity_ts_col)
-    # caches build() pins, surfaced through RetrievalJob.close() so a
-    # long-lived session can return storage memory to baseline
-    pinned: list[DataFrame] = []
 
     def build() -> DataFrame:
         ent = sdf.withColumn(_ENTITY_TS, F.col(entity_ts_col))
-        # Entity df is read >= 3x (bounds, per-fv join sides, final
-        # assembly) — cache it (replaces the reference's in-memory temp
-        # table, hive.py:532/:253).
-        ent = ent.cache()
-        pinned.append(ent)
 
         # J2 kept manual: one tiny job for global bounds -> literal
         # pushdown filters on every feature scan.  The broadcast-guard
         # row count rides the SAME aggregate — one driver-blocking job
-        # here, not three.  Probe the PRE-cache pruned projection, not
-        # the cached ent: aggregating the cache would materialize every
-        # entity column right here at plan-construction time, while the
-        # single-column probe is a column-pruned scan (r5 verdict #1:
-        # this job is per-retrieval cost in real use — at 100 TB the
-        # pruned scan reads one column's pages, the cache build reads
-        # them all).  The cache itself materializes during the first
-        # execution, which reads it >= 3x and would build it anyway.
+        # here, not three — over a single-column, column-pruned scan
+        # (at 100 TB it reads one column's pages).
         bounds = _entity_bounds(sdf, entity_ts_col)
         parts = [
             _prepare_fv(
@@ -344,25 +327,17 @@ def get_historical_features(
         # A1 hoisted: build the deduped entity-key side ONCE per
         # distinct join-key tuple. Catalyst's exchange reuse does not
         # fire across the per-view branches (fresh expr IDs per
-        # resolve defeat the canonical match), so without this a
-        # multi-view retrieval re-runs the same dedup shuffle +
-        # broadcast build per view. Cached even when single-use (r6):
-        # the deduped keys are read once per EXECUTION, and without the
-        # cache every re-execution replays the dedup exchange +
-        # broadcast build. Bounded by the deduped entity-key count and
-        # released by RetrievalJob.close() like every plan-pinned cache.
+        # resolve defeat the canonical match), so every view sharing a
+        # key tuple reads the SAME bound view, and Spark can reuse its
+        # dedup exchange within the one statement.
         ekeys_by_tuple: dict[tuple, DataFrame] = {}
         for part in parts:
             t = tuple(part.entity_cols)
             if t not in ekeys_by_tuple:
-                ek = ent.select(*t, _ENTITY_TS).dropDuplicates().cache()
-                pinned.append(ek)
-                ekeys_by_tuple[t] = ek
+                ekeys_by_tuple[t] = ent.select(*t, _ENTITY_TS).dropDuplicates()
         return _join_fvs_sql(spark, ent, parts, ekeys_by_tuple, do_broadcast)
 
-    return RetrievalJob(
-        build, on_demand_transforms=on_demand_transforms, pinned=pinned
-    )
+    return RetrievalJob(build, on_demand_transforms=on_demand_transforms)
 
 
 @dataclass
@@ -372,7 +347,7 @@ class _FvPart:
     assembly needs. Features travel under positional internal names
     (``cols``) and get their user-visible ``out_names`` back only in
     the outermost SELECT, so colliding output names never meet inside
-    the statement."""
+    the statement; ``tiebreaks`` are positional internal names too."""
 
     feat: DataFrame
     entity_cols: list
@@ -396,11 +371,16 @@ def _prepare_fv(
     created_ts = fv.created_ts_col()
 
     feat = fv.resolve_df(spark)
-    tiebreaks = [c for c in tiebreak_columns if c in feat.columns]
+    # a join key is constant within its group: ordering by it is a no-op
+    tiebreaks = [
+        c for c in tiebreak_columns if c in feat.columns and c not in key_map
+    ]
     cols = [f"__pit_o{idx}_{i}" for i in range(len(fv.features))]
+    tb_cols = [f"__pit_t{idx}_{i}" for i in range(len(tiebreaks))]
     # Subquery projection (hive.py:584-591): event/created ts under
     # internal names, join keys renamed to entity-side names, features
-    # under positional internal names. Pure projection — column
+    # and tiebreaks under positional internal names (a tiebreak may
+    # share a renamed key's name). Pure projection — column
     # pruning reaches the scan. ONE selectExpr call: plan CONSTRUCTION
     # here is dominated by py4j round-trips (~0.4 ms each; a
     # Column-API projection costs one per col/alias, ~190 per feature
@@ -410,7 +390,7 @@ def _prepare_fv(
         sel.append(f"{_bt(created_ts)} AS {_CREATED_TS}")
     sel.extend(f"{_bt(fcol)} AS {_bt(ecol)}" for fcol, ecol in key_map.items())
     sel.extend(f"{_bt(name)} AS {col}" for name, col in zip(fv.features, cols))
-    sel.extend(_bt(c) for c in tiebreaks)
+    sel.extend(f"{_bt(c)} AS {t}" for c, t in zip(tiebreaks, tb_cols))
     feat = feat.selectExpr(*sel)
 
     # J2: literal coarse bounds — ttl==0 -> upper bound only
@@ -444,7 +424,7 @@ def _prepare_fv(
         cols=cols,
         out_names=[fv.output_name(f, full_feature_names) for f in fv.features],
         created_ts=created_ts,
-        tiebreaks=tiebreaks,
+        tiebreaks=tb_cols,
         range_cond=range_cond,
     )
 
@@ -502,7 +482,7 @@ def _join_fvs_sql(
         # (r9 ADVICE).
         acc_sql = bind_sql_view(acc, "__pit_sql_acc")
         # one view per distinct key tuple: views sharing a tuple share
-        # its cached dedup
+        # its dedup
         ek_views = {
             t: bind_sql_view(ek, f"__pit_sql_ek{i}")
             for i, (t, ek) in enumerate(ekeys_by_tuple.items())
@@ -524,7 +504,7 @@ def _join_fvs_sql(
                 ord_sql = [f"unix_micros({_EVENT_TS})"]
                 if part.created_ts:
                     ord_sql.append(f"unix_micros({_CREATED_TS})")
-                ord_sql.extend(_bt(c) for c in part.tiebreaks)
+                ord_sql.extend(part.tiebreaks)
                 best = ", ".join(f"__best.{c} AS {c}" for c in part.cols)
                 latest = f"""
               SELECT {group}, {best}

@@ -27,38 +27,26 @@ from pyspark.sql import DataFrame
 class RetrievalJob:
     """Lazy handle on a composed DataFrame plan.
 
-    Also the cache-lifetime boundary (r4 verdict #8): plan builders
-    that pin intermediates (the PIT plan caches the entity df and the
-    shared deduped key sides) register them in ``pinned``; ``close()``
-    — or leaving a ``with`` block — unpersists them, so N retrievals
-    in a long-lived session return storage memory to baseline instead
-    of accumulating entity caches until the executor heap pressures.
-    The result DataFrame stays valid after ``close()`` (Spark caches
-    are an optimization, not a correctness dependency — uncached
-    lineage recomputes).
+    The job owns no storage: plan builders pin no cache behind it (the
+    PIT plan reads the entity df and its deduped key sides lazily), so
+    N retrievals in a long-lived session leave block-manager storage
+    at baseline whether or not anyone closes them. ``close()`` and the
+    ``with`` protocol stay as no-ops for callers that manage jobs as
+    resources.
     """
 
     def __init__(
         self,
         df_or_thunk,
         on_demand_transforms: Optional[list[Callable[[pd.DataFrame], pd.DataFrame]]] = None,
-        pinned: Optional[list[DataFrame]] = None,
     ):
         self._thunk = df_or_thunk if callable(df_or_thunk) else (lambda: df_or_thunk)
         self._df: Optional[DataFrame] = None
         self._on_demand = list(on_demand_transforms or [])
-        # the SAME list object the builder appends to at build() time
-        self._pinned: list[DataFrame] = pinned if pinned is not None else []
 
     def close(self) -> None:
-        """Unpersist every intermediate the plan builder pinned.
-        Idempotent; safe before or after execution."""
-        while self._pinned:
-            df = self._pinned.pop()
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
+        """No-op: the job holds nothing to release. Idempotent; the
+        plan still answers afterwards."""
 
     def __enter__(self) -> "RetrievalJob":
         return self

@@ -54,3 +54,8 @@ def shuffle_records(df) -> list[int]:
         for cls, m in walk(plan)
         if cls == "ShuffleExchangeExec" and "recordsRead" in m
     ]
+
+
+def cached_rdd_ids(spark) -> set:
+    """Ids of the RDDs that hold block-manager storage right now."""
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}

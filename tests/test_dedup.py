@@ -167,22 +167,23 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
 
 def test_connected_components_chain(spark):
     """Multi-hop chains must converge to one component (propagation
-    depth > 1), disjoint components stay separate, and exactly one
-    canonical survivor is flagged per component."""
+    depth > 1), disjoint components stay separate, a self-pair is its
+    own component, and exactly one canonical survivor is flagged per
+    component."""
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 4)],
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 4), (30, 30)],
         "id_a long, id_b long",
     )
     got = (
-        D.connected_components(pairs)
+        D.connected_components_star(pairs)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
     comp = got.set_index("doc_id")["component_id"].to_dict()
-    assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 20: 1, 10: 10, 11: 10}
+    assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 20: 1, 10: 10, 11: 10, 30: 30}
     canon = got[got.is_canonical].doc_id.tolist()
-    assert sorted(canon) == [1, 10]
+    assert sorted(canon) == [1, 10, 30]
 
 
 def test_star_components_chain_and_rounds(spark):
@@ -209,24 +210,6 @@ def test_star_components_chain_and_rounds(spark):
         assert (got.loc[1:n, "component_id"] == 1).all()
         assert (got.loc[100:102, "component_id"] == 100).all()
         assert sorted(got[got.is_canonical].index.tolist()) == [1, 100]
-
-
-def test_star_components_matches_plain_on_shallow_graph(spark):
-    """On the shallow graphs plain propagation handles, both
-    algorithms return byte-identical output."""
-    pairs = spark.createDataFrame(
-        [(5, 3), (3, 9), (7, 8), (2, 2), (4, 1), (1, 6)],
-        "id_a long, id_b long",
-    )
-    plain = (
-        D.connected_components(pairs).toPandas().sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    star = (
-        D.connected_components_star(pairs).toPandas().sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert plain.equals(star)
 
 
 def test_decontaminate_containment(spark):

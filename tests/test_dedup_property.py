@@ -84,7 +84,8 @@ def test_connected_components_property(spark, edges):
     pairs = spark.createDataFrame(
         pd.DataFrame(edges, columns=["id_a", "id_b"])
     )
-    got = D.connected_components(pairs).toPandas()
+    # distributed star contraction (the fast path is checked below)
+    got = D.connected_components_star(pairs, small_graph_threshold=0).toPandas()
     # python union-find oracle
     parent = {}
 
@@ -101,7 +102,7 @@ def test_connected_components_property(spark, edges):
             parent[max(ra, rb)] = min(ra, rb)
     expected = {n: find(n) for n in parent}
     assert got.set_index("doc_id")["component_id"].to_dict() == expected
-    # the large-star/small-star variant must agree with the same oracle
+    # the small-graph driver fast path must agree with the same oracle
     star = D.connected_components_star(pairs).toPandas()
     assert star.set_index("doc_id")["component_id"].to_dict() == expected
 

@@ -122,8 +122,11 @@ def test_feast_facade_executes_with_stub(spark):
     """Execute the facade end-to-end against the protocol stub: the
     gated block compiles, the OfflineStore/DataSource/RetrievalJob
     subclass relationships hold, and the universal PIT + pull_latest
-    shapes produce the golden values."""
+    shapes produce the golden values. The facade's job adapter never
+    calls close(), so its retrievals must pin nothing: block-manager
+    storage stays at the pre-retrieval baseline."""
     import feast_stub
+    from conftest import cached_rdd_ids
 
     saved = feast_stub.install()
     try:
@@ -142,7 +145,10 @@ def test_feast_facade_executes_with_stub(spark):
         assert issubclass(fp.SparkHiveSource, DataSource)
         assert issubclass(fp.SparkFeastOfflineStore, OfflineStore)
         assert issubclass(fp._JobAdapter, RetrievalJob)
-        _run_universal_pit_shape(fp, feast, spark)
+        baseline = cached_rdd_ids(spark)
+        for _ in range(3):
+            _run_universal_pit_shape(fp, feast, spark)
+        assert not (cached_rdd_ids(spark) - baseline)
     finally:
         feast_stub.uninstall(saved)
         importlib.reload(FP)

@@ -180,6 +180,45 @@ def test_pit_dedup_by_created_ts(spark):
     assert got["v"].tolist() == [222.0]
 
 
+@pytest.mark.parametrize(
+    "join_keys, rename, tiebreaks, rows, expected",
+    [
+        (["k"], {}, ["k"], [], {1: 10.0, 2: 30.0}),
+        # a full (event_ts) tie on k=1: seq decides, k is a no-op
+        (["k"], {}, ["k", "seq"], [(1, 1, 20.0)], {1: 20.0, 2: 30.0}),
+        # the tiebreak is a non-key column named like the renamed key
+        ({"fk": "k"}, {"k": "fk", "seq": "k"}, ["k"], [(1, 1, 20.0)],
+         {1: 20.0, 2: 30.0}),
+    ],
+    ids=["key_only", "key_and_seq", "named_like_renamed_key"],
+)
+def test_tiebreak_on_join_key(spark, join_keys, rename, tiebreaks, rows, expected):
+    """A tiebreak column that is also the view's join key is constant
+    within each group, so it is dropped from the ordering, and a
+    tiebreak that shares a renamed key's name still orders. Both used
+    to be selected under one name and fail with AMBIGUOUS_REFERENCE."""
+    base = datetime(2024, 1, 10, 12, 0)
+    entity_pdf = pd.DataFrame({"k": [1, 2], "event_timestamp": [base, base]})
+    feature_rows = [(1, 2, -2, 1.0), (1, 1, 0, 10.0), (2, 1, 5, 30.0)]
+    feature_rows += [(k, 1, seq, v) for k, seq, v in rows]
+    feature_pdf = pd.DataFrame(
+        [(k, base - timedelta(hours=h), s, v) for k, h, s, v in feature_rows],
+        columns=["k", "ts", "seq", "v"],
+    ).rename(columns=rename)
+    fv = FeatureView(
+        name="fv",
+        source=spark.createDataFrame(feature_pdf),
+        join_keys=join_keys,
+        features=["v"],
+        event_timestamp_column="ts",
+    )
+    got = get_historical_features(
+        spark, entity_pdf, [fv], tiebreak_columns=tiebreaks
+    ).to_df()
+    assert list(got.columns) == ["k", "event_timestamp", "v"]
+    assert dict(zip(got["k"], got["v"])) == expected
+
+
 def test_pit_multiple_feature_views(spark, tiny):
     entity_pdf, feature_pdf = tiny
     fv1 = FeatureView(

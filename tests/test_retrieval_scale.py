@@ -13,6 +13,8 @@ from feast_hive_spark.plans.pit import FeatureView, get_historical_features
 from feast_hive_spark.plans.pull import pull_latest
 from feast_hive_spark.retrieval import RetrievalJob
 
+from conftest import cached_rdd_ids
+
 
 def test_retrieval_job_lazy_and_on_demand(spark):
     """ODFV passthrough parity (hive.py:266-268, :309-311): transforms
@@ -122,23 +124,13 @@ def test_pit_broadcast_and_smj_paths_agree(
     assert got.to_dict() == {1: 1.0, 2: 2.0, 3: 4.0}
 
 
-def test_retrieval_close_returns_storage_to_baseline(spark, sf_dir):
-    """r4 verdict #8: the PIT builder pins the entity df (and shared
-    key sides) per retrieval; without RetrievalJob.close() N
-    retrievals accumulate N caches in a long-lived session. close()
-    (or the context manager) must return block-manager storage to the
-    pre-retrieval baseline, and the result plan must stay usable
-    (uncached lineage recomputes)."""
-    from pyspark.sql import functions as F
-
-    from feast_hive_spark.plans.pit import FeatureView, get_historical_features
+def test_retrievals_without_close_leave_storage_at_baseline(spark, sf_dir):
+    """A PIT retrieval pins nothing: N retrievals in a long-lived
+    session, never closed, leave block-manager storage at the
+    pre-retrieval baseline. close() stays a callable no-op (twice, and
+    through the context manager), the plan still answers afterwards,
+    and a pandas-entity plan reads no in-memory relation."""
     from feast_hive_spark.sources.tables import read_table
-
-    def cached_ids() -> set:
-        return {
-            info.id()
-            for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        }
 
     ev = read_table(spark, sf_dir, "events")
     entities = ev.filter(F.col("event_type") == "purchase").select(
@@ -151,26 +143,26 @@ def test_retrieval_close_returns_storage_to_baseline(spark, sf_dir):
         name="clicks", source=feats, join_keys=["user_id"],
         features=["value"], event_timestamp_column="fts",
     )
-    baseline = cached_ids()
+    baseline = cached_rdd_ids(spark)
     jobs = []
     for _ in range(3):
         job = get_historical_features(spark, entities, [fv])
         rows = job.to_spark_df().count()
         assert rows > 0
         jobs.append(job)
-    assert cached_ids() - baseline  # the pins are real
-    kept = jobs[0].to_spark_df()
-    for job in jobs:
-        job.close()
-        job.close()  # idempotent
-    # every pin the retrievals added is gone; entries cached by OTHER
-    # components may be concurrently evicted/unpersisted (async), so
-    # the invariant is set-difference, not exact count equality
-    assert not (cached_ids() - baseline)
-    assert kept.count() == rows  # plan survives unpersist
-
-    # context-manager form
+    # entries cached by OTHER components may be concurrently evicted
+    # (async), so the invariant is set-difference, not count equality
+    assert not (cached_rdd_ids(spark) - baseline)
+    jobs[0].close()
+    jobs[0].close()
+    assert jobs[0].to_spark_df().count() == rows
     with get_historical_features(spark, entities, [fv]) as job:
         assert job.to_spark_df().count() == rows
-        assert cached_ids() - baseline
-    assert not (cached_ids() - baseline)
+    assert not (cached_rdd_ids(spark) - baseline)
+
+    entity_pdf = entities.limit(20).toPandas()
+    df = get_historical_features(spark, entity_pdf, [fv]).to_spark_df()
+    assert len(df.collect()) == len(entity_pdf) > 0
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in executed
+    assert not (cached_rdd_ids(spark) - baseline)
