@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from feast_hive_spark.functions import text as X
 from feast_hive_spark.functions.text import h48
 from feast_hive_spark.operators.prefix import quantile_bucket
+from feast_hive_spark.plans.local import local_frame
 from feast_hive_spark.plans.memo import job_memo
 from feast_hive_spark.sources.tables import bind_sql_view
 
@@ -1013,25 +1014,13 @@ def grouped_percent_rank(
         rows.append((r["__bkt"], g, per_group.get(g, 0)))
         per_group[g] = per_group.get(g, 0) + r["__c"]
     # the broadcast side must carry the caller's actual group dtype
-    # (a hard-coded string would silently break integer group keys).
-    # Arrow-pinned (r13, guide §4): bare createDataFrame(list) planned
-    # as 32 near-empty PICKLED-python tasks re-executed per run — the
-    # two scans below were the dominant warm cost of every consumer
-    # (measured 0.6-0.7 s/run on perplexity_buckets_summary).
-    from feast_hive_spark.ckpt import pin_local_rows
-
+    # (a hard-coded string would silently break integer group keys)
     gtype = dict(df.dtypes)[group_col]
-    offsets = pin_local_rows(
-        spark,
-        rows or [(0, None, 0)],
-        ("__bkt", group_col, "__off"),
-        f"__bkt int, {group_col} {gtype}, __off long",
+    offsets = local_frame(
+        spark, rows, f"__bkt int, {group_col} {gtype}, __off long"
     )
-    totals = pin_local_rows(
-        spark,
-        [(g, n) for g, n in per_group.items()] or [(None, 0)],
-        (group_col, "__ng"),
-        f"{group_col} {gtype}, __ng long",
+    totals = local_frame(
+        spark, per_group.items(), f"{group_col} {gtype}, __ng long"
     )
     w = Window.partitionBy("__bkt", group_col).orderBy(
         F.col(value_col), F.col(id_col)
@@ -1243,15 +1232,8 @@ def grouped_budget_select(
             rows.append((r["__bkt"], g, per_group.get(g, 0)))
             per_group[g] = per_group.get(g, 0) + r["__s"]
         gtype = dict(df.dtypes)[group_col]
-        # Arrow-pinned for the same reason as grouped_percent_rank's
-        # offsets: a pickled-python scan re-executed per run (r13, §4)
-        from feast_hive_spark.ckpt import pin_local_rows
-
-        offsets = pin_local_rows(
-            spark,
-            rows or [(0, None, 0)],
-            ("__bkt", group_col, "__off"),
-            f"__bkt int, {group_col} {gtype}, __off long",
+        offsets = local_frame(
+            spark, rows, f"__bkt int, {group_col} {gtype}, __off long"
         )
         w = (
             Window.partitionBy("__bkt", group_col)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feast_hive_spark.functions.text import h48
+from feast_hive_spark.plans.local import local_frame
 
 #: basis-point resolution for hash-derived fractions (1/10000)
 _BP = 10000
@@ -480,11 +481,7 @@ def greedy_shingle_cover(
         # reads a local table instead of replaying prior rounds
         covered = covered.distinct().localCheckpoint(eager=True)
     sh.unpersist()
-    # id column keeps the input's type (string/int/... ids all work).
-    # Arrow-pinned: the greedy picks are the query's returned frame
-    # (r13, guide §4 — no per-run pickled-python scan)
-    from feast_hive_spark.ckpt import pin_local_rows
-
+    # id column keeps the input's type (string/int/... ids all work)
     schema = T.StructType(
         [
             T.StructField("pick_rank", T.LongType(), False),
@@ -493,4 +490,4 @@ def greedy_shingle_cover(
             T.StructField("cum_covered", T.LongType(), True),
         ]
     )
-    return pin_local_rows(df.sparkSession, picks, schema.names, schema)
+    return local_frame(df.sparkSession, picks, schema)

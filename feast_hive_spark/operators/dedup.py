@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from feast_hive_spark import ckpt
 from feast_hive_spark.functions import text as X
 from feast_hive_spark.functions import vector as V
+from feast_hive_spark.plans.local import local_frame
 from feast_hive_spark.plans.memo import job_memo, plan_memo
 
 
@@ -91,6 +92,14 @@ def exact_dedup_stats(df: DataFrame, text_col: str) -> DataFrame:
 # ~3 MB of (long, long) rows on the driver — same ceiling as the CC
 # small-graph probe
 _CANDIDATE_BROADCAST_ROWS = 200_000
+# Past this many candidate rows the broadcast side is pinned instead of
+# left a LocalRelation. Catalyst re-plans a LocalRelation row by row on
+# every execution, ~2 us a row: at sf0.1 dedup_jaccard_prefix's 124,800
+# candidates added ~0.21 s of planning per run (warm exec median 0.98 ->
+# 1.29 s over 4 interleaved rounds, 4 CPUs), while a checkpointed scan
+# plans in ~10 ms for one build job. The other guarded queries probe
+# <= ~1,000 rows and run faster as a LocalRelation.
+_LOCAL_CANDIDATE_ROWS = 10_000
 
 
 def _guarded_candidates(candidates: DataFrame, threshold: int = _CANDIDATE_BROADCAST_ROWS):
@@ -116,16 +125,9 @@ def _guarded_candidates(candidates: DataFrame, threshold: int = _CANDIDATE_BROAD
         lambda: candidates.limit(threshold + 1).collect(),
     )
     if len(probe) <= threshold:
-        # Arrow-pinned (r13, guide §4): the broadcast build re-scanned
-        # a 32-slice pickled-python RDD on every consumer execution
-        from feast_hive_spark.ckpt import pin_local_rows
-
-        local = pin_local_rows(
-            candidates.sparkSession,
-            probe,
-            candidates.schema.names,
-            candidates.schema,
-        )
+        local = local_frame(candidates.sparkSession, probe, candidates.schema)
+        if len(probe) > _LOCAL_CANDIDATE_ROWS:
+            local = ckpt.track(local.coalesce(1).localCheckpoint(eager=True))
         return F.broadcast(local)
     return candidates
 
@@ -926,18 +928,9 @@ def _driver_union_find(
             parent[max(ra, rb)] = min(ra, rb)
     out = [(n, find(n)) for n in parent]
     id_type = dict(pairs.dtypes)[id_a]
-    spark = pairs.sparkSession
-    # r13 optimization (guide §4): pin the probe-bounded labels as a
-    # 1-partition JVM-row checkpoint (Arrow upload, no pickled-row
-    # re-deserialization across 32 tasks on every downstream
-    # execution — entity_resolution_parts scans the labels twice per
-    # run). See ckpt.pin_local_rows.
-    from feast_hive_spark import ckpt
-
-    labels = ckpt.pin_local_rows(
-        spark,
+    labels = local_frame(
+        pairs.sparkSession,
         out,
-        ["doc_id", "component_id"],
         f"doc_id {id_type}, component_id {id_type}",
     )
     return labels.withColumn(
@@ -1254,7 +1247,7 @@ def _block_cosine_pairs(
     base = df.select(id_col, vec_col)
     n = base.count()
     if n == 0:
-        return spark.createDataFrame([], "id_a long, id_b long, cosine double")
+        return local_frame(spark, [], "id_a long, id_b long, cosine double")
     par = spark.sparkContext.defaultParallelism
     P = max(math.ceil(n / rows_per_block), math.ceil(math.sqrt(2.0 * par)))
     P = max(1, min(P, n))
@@ -1987,13 +1980,6 @@ def minhash_band_sweep(
     if collapse_exact:
         _mem, _reps, rep_rows = _exact_collapse(df, id_col, text_col)
         df = rep_rows
-    # The per-config _jaccard_pairs verify joins pin their guarded
-    # candidate broadcasts as Arrow checkpoints (r13); those pins feed
-    # ONLY this build and must be freed once the readout materializes
-    # or repeated sweep builds accumulate blocks (the r8 leak class).
-    # Snapshot AFTER _exact_collapse: the session bundle's memoized
-    # checkpoints must survive.
-    _pin_snap = ckpt.snapshot()
     with_sh = _spread(df.select(id_col, text_col)).select(
         F.col(id_col), X.tokens_array(text_col).alias("__tk")
     ).select(
@@ -2067,7 +2053,6 @@ def minhash_band_sweep(
     out = ckpt.track(out.localCheckpoint(eager=True))
     with_sh.unpersist()
     sigs.unpersist()
-    ckpt.release_scope(df.sparkSession, _pin_snap, keep=(out,))
     return out
 
 

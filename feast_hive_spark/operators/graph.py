@@ -18,6 +18,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feast_hive_spark.plans.local import local_frame
 from feast_hive_spark.plans.memo import plan_memo
 
 SCALE = 1_000_000_000_000  # 1e-12 rank units
@@ -41,9 +42,7 @@ def _driver_pagerank(
     deg = {v: len(ns) for v, ns in out_nbrs.items()}
     nn = len(deg)
     if nn == 0:
-        return spark.createDataFrame(
-            [], f"node {id_type}, rank_e12 long"
-        )
+        return local_frame(spark, [], f"node {id_type}, rank_e12 long")
     # HALF_UP rounding to match Spark's round() (python round() is
     # half-even); all values are positive
     half_up = lambda x: int(math.floor(x + 0.5))  # noqa: E731
@@ -56,9 +55,7 @@ def _driver_pagerank(
             for d in ns:
                 acc[d] += c
         r = {v: base + (damping_pct * a) // 100 for v, a in acc.items()}
-    return spark.createDataFrame(
-        list(r.items()), f"node {id_type}, rank_e12 long"
-    )
+    return local_frame(spark, r.items(), f"node {id_type}, rank_e12 long")
 
 
 def pagerank(
@@ -205,7 +202,7 @@ def _driver_pagerank_weighted(
     mult = {node: int(k) for node, k in weight_rows}
     nn = sum(mult.get(v, 1) for v in deg)
     if nn == 0:
-        return spark.createDataFrame([], f"node {id_type}, rank_e12 long")
+        return local_frame(spark, [], f"node {id_type}, rank_e12 long")
     half_up = lambda x: int(math.floor(x + 0.5))  # noqa: E731
     r = {v: half_up(float(SCALE) / nn) for v in deg}
     base = half_up(float(100 - damping_pct) / 100.0 * SCALE / nn)
@@ -216,9 +213,7 @@ def _driver_pagerank_weighted(
             for d, w in outs:
                 acc[d] += w * c
         r = {v: base + (damping_pct * a) // 100 for v, a in acc.items()}
-    return spark.createDataFrame(
-        list(r.items()), f"node {id_type}, rank_e12 long"
-    )
+    return local_frame(spark, r.items(), f"node {id_type}, rank_e12 long")
 
 
 def pagerank_weighted(
@@ -624,17 +619,9 @@ def _driver_label_propagation(
             nxt[node] = min(c.items(), key=lambda kv: (-kv[1], kv[0]))[0]
         labels = nxt
     id_type = dict(pairs.dtypes)[id_a]
-    # Same rationale as dedup._driver_union_find (r13): pin the
-    # probe-bounded result as a 1-partition JVM-row checkpoint (Arrow
-    # upload) so the memoized frame doesn't re-deserialize pickled
-    # Python rows across defaultParallelism tasks on every downstream
-    # execution. See ckpt.pin_local_rows.
-    from feast_hive_spark import ckpt
-
-    return ckpt.pin_local_rows(
+    return local_frame(
         pairs.sparkSession,
         sorted(labels.items()),
-        ["node", "community"],
         f"node {id_type}, community {id_type}",
     )
 

@@ -13,6 +13,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feast_hive_spark.plans.local import local_frame
+
 
 def profile_columns(df: DataFrame, numeric_cols: Sequence[str]) -> DataFrame:
     """Per-column stats for numeric columns: row count, nulls, distinct
@@ -229,12 +231,7 @@ def ols_fit_2feature(
     else:
         coefs = [None, None, None]
     rows = list(zip(("intercept", names[0], names[1]), coefs))
-    # Arrow-pinned: this is a registry query's returned frame (r13 §4)
-    from feast_hive_spark.ckpt import pin_local_rows
-
-    return pin_local_rows(
-        df.sparkSession, rows, ("term", "coef"), "term string, coef double"
-    )
+    return local_frame(df.sparkSession, rows, "term string, coef double")
 #: fixed-point scale for logreg weights/features (1e6 = 1.0)
 _LR_MICRO = 1_000_000
 
@@ -316,13 +313,8 @@ def logreg_weights_df(
     def build() -> DataFrame:
         w = logreg_train(df, feature_cols, label_col, iters=iters)
         rows = [(nm, int(wj)) for nm, wj in zip(names, w)]
-        from feast_hive_spark.ckpt import pin_local_rows
-
-        return pin_local_rows(
-            df.sparkSession,
-            rows,
-            ("term", "weight_micro"),
-            "term string, weight_micro long",
+        return local_frame(
+            df.sparkSession, rows, "term string, weight_micro long"
         )
 
     return plan_memo(

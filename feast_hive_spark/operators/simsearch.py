@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feast_hive_spark.functions import vector as V
+from feast_hive_spark.plans.local import local_frame
 from feast_hive_spark.plans.memo import job_memo
 
 
@@ -1658,13 +1659,7 @@ def _assign_via_join(
         (c, [comps[p] for p in range(len(comps))])
         for c, comps in sorted(cent.items())
     ]
-    # Arrow-pinned: bare createDataFrame planned 32 pickled-python
-    # tasks re-executed on every run of the consumer join (r13, §4)
-    from feast_hive_spark.ckpt import pin_local_rows
-
-    cent_df = pin_local_rows(
-        spark, cent_rows, ("__cc", "__cm"), "__cc int, __cm array<bigint>"
-    )
+    cent_df = local_frame(spark, cent_rows, "__cc int, __cm array<bigint>")
     dist = F.expr(
         "aggregate(zip_with(__vm, __cm, (x, c) -> (x - c) * (x - c)), "
         "0L, (a, v) -> a + v)"
@@ -1918,16 +1913,13 @@ def _pq_train_build(
             # path's (dist, code) tie-break. Survives IVF-scale
             # codebooks where the CASE/named_struct literal SQL
             # would blow past codegen limits.
-            from feast_hive_spark.ckpt import pin_local_rows
-
-            cdf = pin_local_rows(
+            cdf = local_frame(
                 spark,
                 [
                     (s, c, [cent[s][c][p] for p in range(len(cent[s][c]))])
                     for s in sorted(cent)
                     for c in sorted(cent[s])
                 ],
-                ("s", "__cc", "__cm"),
                 "s int, __cc int, __cm array<bigint>",
             )
             dist = F.expr(
@@ -1974,18 +1966,12 @@ def _pq_train_build(
             "sv",
             f"CAST(CASE {' '.join(branches)} END AS INT) AS __c",
         )
-    # Arrow-pinned: this frame IS a registry query's output — a bare
-    # createDataFrame re-crossed the Python boundary in 32 pickled
-    # tasks on every execution (r13, guide §4)
-    from feast_hive_spark.ckpt import pin_local_rows
-
-    return pin_local_rows(
+    return local_frame(
         spark,
         [
             (int(r["s"]), int(r["__c"]), int(r["pos"]), int(r["cm"]))
             for r in cent_rows
         ],
-        ("s", "code", "pos", "cm"),
         "s long, code long, pos long, cm long",
     )
 
@@ -2036,7 +2022,7 @@ def kcenter_diverse_sample(
     )
     seed = emb.select(F.min(id_col).alias("__s")).first()["__s"]
     if seed is None:  # empty corpus: no picks, not a (1, NULL) row
-        return emb.sparkSession.createDataFrame([], out_schema)
+        return local_frame(emb.sparkSession, [], out_schema)
     picks = [(1, seed, 0)]
     centers = emb.filter(F.col(id_col) == seed).select(
         F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cv")
@@ -2071,4 +2057,4 @@ def kcenter_diverse_sample(
                 F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cv")
             )
         ).localCheckpoint(eager=True)
-    return emb.sparkSession.createDataFrame(picks, out_schema)
+    return local_frame(emb.sparkSession, picks, out_schema)

@@ -18,13 +18,13 @@ sizeInBytes`` — file bytes for scans, no job); past the gate, return
 the frame unhinted and let Catalyst/AQE pick the strategy from the
 same statistics plus, under AQE, exact runtime sizes.
 
-Gate default: 16 MiB of estimated input bytes. Above Spark's 10 MiB
+The gate: 16 MiB of estimated input bytes. Above Spark's 10 MiB
 default ``autoBroadcastJoinThreshold`` (so the hint still buys a
 deterministic broadcast for the 10-16 MiB dims Catalyst's conservative
 default would shuffle — robustly safe on any real executor), but far
 below the hundreds-of-MiB zone where a forced broadcast stops being
-free insurance and becomes the failure mode. Override with
-``SPARK_GRAFT_BCAST_GATE_BYTES``.
+free insurance and becomes the failure mode. ``GATE_BYTES`` is a
+module constant; tests monkeypatch it to reach either arm.
 
 Hard (ungated) ``F.broadcast`` remains correct ONLY for frames whose
 size is bounded by SCHEMA, not by data volume: nation/region (fixed
@@ -35,30 +35,10 @@ those and route every volume-growing dimension through here.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_GATE_BYTES = 16 << 20
-
-
-def gate_bytes() -> int:
-    """Env override parser: plain bytes or k/m/g-suffixed ("16m",
-    "64MB"). A malformed value falls back to the default instead of
-    turning a tuning knob into a full-suite build outage."""
-    env = os.environ.get("SPARK_GRAFT_BCAST_GATE_BYTES")
-    if not env:
-        return DEFAULT_GATE_BYTES
-    s = env.strip().lower().removesuffix("b")
-    mult = 1
-    if s and s[-1] in "kmg":
-        mult = 1 << (10 * ("kmg".index(s[-1]) + 1))
-        s = s[:-1]
-    try:
-        return int(s) * mult
-    except ValueError:
-        return DEFAULT_GATE_BYTES
+GATE_BYTES = 16 << 20
 
 
 def _estimated_bytes(df: DataFrame) -> int:
@@ -85,7 +65,7 @@ def gated_broadcast(df: DataFrame, probe: "DataFrame | None" = None) -> DataFram
         est = _estimated_bytes(probe if probe is not None else df)
     except Exception:  # Connect sessions have no _jdf — never force
         return df
-    return F.broadcast(df) if est <= gate_bytes() else df
+    return F.broadcast(df) if est <= GATE_BYTES else df
 
 
 def sql_broadcast_hint(
@@ -106,6 +86,6 @@ def sql_broadcast_hint(
             est = _estimated_bytes(read_table(spark, sf_dir, table))
         except Exception:
             continue
-        if est <= gate_bytes():
+        if est <= GATE_BYTES:
             keep.append(alias)
     return f"/*+ BROADCAST({', '.join(keep)}) */" if keep else ""

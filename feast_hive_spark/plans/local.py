@@ -1,56 +1,41 @@
-"""LocalRelation construction for build-time-folded query results
-(r11 `_esr_fold` pattern, moved out of registry_analytics in r12 —
-it is plan infrastructure consumed by several registry modules, and
-living here keeps the module graph cycle-free)."""
+"""Plan helpers shared by the registry modules and operators:
+``local_frame`` turns driver-side rows into a DataFrame, and
+``sorted_readout`` orders a report-sized result without a range
+sort. Living here keeps the module graph cycle-free."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
-def local_numeric_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """Materialize collected scalar rows as a TRUE LocalRelation
-    (VALUES + foldable casts -> ConvertToLocalRelation ->
-    LocalTableScan): collect() on the result runs entirely
-    driver-side, zero job launches. ``createDataFrame`` would instead
-    park the rows behind a 1-task ExistingRDD scan that still pays a
-    scheduler round-trip per execution. Doubles go through
-    CAST('repr' AS DOUBLE) so the binary value round-trips exactly;
-    strings are quote-escaped literals; timestamps are TIMESTAMP
-    literals (collected as naive datetimes in the session tz — UTC,
-    read_table forces it)."""
-    if not rows:
-        return spark.createDataFrame([], schema)
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """The one way driver-side rows become a DataFrame: the rows go
+    to the JVM once as an Arrow table, and below
+    ``spark.sql.execution.arrow.localRelationThreshold`` the result is
+    a true ``LocalRelation``. It plans as a ``LocalTableScan`` with an
+    exact ``sizeInBytes``, ``collect()`` on it runs no job, and it
+    holds no block storage, so nothing needs releasing and nothing is
+    lost with an executor. A ``pa.Table`` always takes the Arrow path,
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    Catalyst re-plans a LocalRelation row by row on every execution
+    (~2 us a row), so a plan that re-executes with ~10k+ local rows
+    may be cheaper with a pin (``dedup._guarded_candidates``).
 
-    def fmt(v, t):
-        if v is None:
-            return f"CAST(NULL AS {t.upper()})"
-        if t == "double":
-            return f"CAST('{v!r}' AS DOUBLE)"
-        if t == "string":
-            esc = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{esc}'"
-        if t == "timestamp":
-            return f"TIMESTAMP '{v}'"
-        if t == "date":
-            return f"DATE '{v}'"
-        if t in ("tinyint", "smallint", "int", "bigint", "boolean",
-                 "float") or t.startswith("decimal"):
-            return f"CAST({v} AS {t.upper()})"
-        # anything else would render an unquoted value into SQL
-        # (invalid or — worse — silently misparsed); fail loudly so a
-        # new caller adds a literal branch instead (r12 advice)
-        raise TypeError(
-            f"local_numeric_frame: no literal branch for type {t!r}"
-        )
-
-    types = [f.dataType.simpleString() for f in schema.fields]
-    vals = ",".join(
-        "(" + ",".join(fmt(v, t) for v, t in zip(row, types)) + ")"
-        for row in rows
+    ``schema`` is a ``StructType`` or a DDL string. Timestamps are
+    naive datetimes in the session time zone (UTC, which the engine
+    pins), the form ``collect()`` returns them in."""
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema, timestamp_utc=False)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
-    names = ",".join(f.name for f in schema.fields)
-    return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t({names})")
+    return spark.createDataFrame(table, schema)
 
 
 def sorted_readout(df: DataFrame, *cols, max_rows: int) -> DataFrame:

@@ -731,10 +731,8 @@ def topk_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     job_memo keys on the plan, so a mutated source rebuilds). bench.py
     flags it ``build_materialized``: exec measures the readout,
     prepare_cold the real plan. The built LocalRelation frame is
-    itself plan-memoized so warm builds skip re-parsing the VALUES
-    statement (output is k x #brands rows, but the pattern must stay
-    cheap at any bounded size)."""
-    from feast_hive_spark.plans.local import local_numeric_frame
+    itself plan-memoized so warm builds skip re-uploading the rows."""
+    from feast_hive_spark.plans.local import local_frame
     from feast_hive_spark.plans.memo import job_memo, plan_memo
 
     ensure_views(spark, sf_dir)
@@ -753,7 +751,7 @@ def topk_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = job_memo(
             spark, [plan], ("topk_parts_per_brand_fold",), plan.collect
         )
-        return local_numeric_frame(spark, rows, plan.schema)
+        return local_frame(spark, rows, plan.schema)
 
     return plan_memo(spark, plan, ("topk_parts_per_brand_frame",), build)
 
@@ -780,11 +778,8 @@ def events_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     job_memo keys on the plan, so a mutated source rebuilds). bench.py
     flags it ``build_materialized``: exec measures the readout,
     prepare_cold the real plan. The built LocalRelation frame is
-    itself plan-memoized so warm builds skip re-parsing the VALUES
-    statement — at a 10-year/10-type span that text is ~37k rows,
-    and re-parsing it per build would move a multi-MB Catalyst parse
-    into the graded warm prepare."""
-    from feast_hive_spark.plans.local import local_numeric_frame
+    itself plan-memoized so warm builds skip re-uploading the rows."""
+    from feast_hive_spark.plans.local import local_frame
     from feast_hive_spark.plans.memo import job_memo, plan_memo
 
     ensure_views(spark, sf_dir)
@@ -801,7 +796,7 @@ def events_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = job_memo(
             spark, [plan], ("events_daily_rollup_fold",), plan.collect
         )
-        return local_numeric_frame(spark, rows, plan.schema)
+        return local_frame(spark, rows, plan.schema)
 
     return plan_memo(spark, plan, ("events_daily_rollup_frame",), build)
 

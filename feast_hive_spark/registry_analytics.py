@@ -1710,13 +1710,11 @@ def _esr_fold(
     else:
         sliced = standalone_build()
     rows = job_memo(spark, [sliced], (token,), sliced.collect)
-    return _local_numeric_frame(spark, rows, sliced.schema)
+    return local_frame(spark, rows, sliced.schema)
 
 
-# moved to plans/local.py in r12 (consumed by registry.py too); the
-# private alias keeps this module's many internal call sites intact
 from feast_hive_spark.plans.local import (  # noqa: E402
-    local_numeric_frame as _local_numeric_frame,
+    local_frame,
     sorted_readout as _sorted_readout,
 )
 
@@ -1889,7 +1887,7 @@ def events_scalar_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM {g} WHERE gid = 14
         """)
     rows = job_memo(spark, [sliced], ("esr_report_fold",), sliced.collect)
-    return _local_numeric_frame(spark, rows, sliced.schema)
+    return local_frame(spark, rows, sliced.schema)
 
 
 @register(
@@ -4800,18 +4798,12 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = d.groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
     t = c.agg(F.sum("n").alias("tot"))
-    # r13 optimization (guide §4/§2.4): the 9-row Benford literal table
-    # as a TRUE LocalRelation instead of createDataFrame(list) — the
-    # latter plans as 32 slices of pickled Python rows, re-scanned
-    # through the Python boundary on every run and dragging the final
-    # join to 32 near-empty tasks. c is digit-domain-bounded (<=9
-    # rows), so the hard broadcast keeps the join exchange-free.
-    from pyspark.sql.types import StructType
-
-    e = _local_numeric_frame(
+    # c is digit-domain-bounded (<=9 rows), so the hard broadcast
+    # keeps the join exchange-free
+    e = local_frame(
         spark,
         [(i + 1, p) for i, p in enumerate(_BENFORD_MICRO)],
-        StructType.fromDDL("digit bigint, exp_micro bigint"),
+        "digit bigint, exp_micro bigint",
     )
     return (
         e.join(F.broadcast(c), "digit", "left")

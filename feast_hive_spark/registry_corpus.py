@@ -11,7 +11,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from feast_hive_spark.functions import text as X
-from feast_hive_spark.plans.local import sorted_readout as _sorted_readout
+from feast_hive_spark.plans.local import (
+    local_frame,
+    sorted_readout as _sorted_readout,
+)
 from feast_hive_spark.functions import vector as V
 from feast_hive_spark.operators import corpus as C
 from feast_hive_spark.registry import register
@@ -1263,12 +1266,9 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     merges = bpe_merges(docs, "text", n_merges=_BPE_ROUNDS)
-    from feast_hive_spark.ckpt import pin_local_rows
-
-    return pin_local_rows(
+    return local_frame(
         spark,
         merges,
-        ("merge_round", "left_sym", "right_sym", "pair_freq"),
         "merge_round long, left_sym string, right_sym string, pair_freq long",
     )
 

@@ -6,14 +6,8 @@ while provably small — these tests pin the gate's two arms and the
 SQL-hint builder's empty-hint validity.
 """
 
-import os
-
-from feast_hive_spark.plans.bcast import (
-    DEFAULT_GATE_BYTES,
-    gate_bytes,
-    gated_broadcast,
-    sql_broadcast_hint,
-)
+from feast_hive_spark.plans import bcast
+from feast_hive_spark.plans.bcast import gated_broadcast, sql_broadcast_hint
 
 
 def _hinted(df) -> bool:
@@ -25,77 +19,43 @@ def test_gate_small_frame_hinted(spark):
     assert _hinted(gated_broadcast(df))
 
 
-def test_gate_env_zero_drops_hint(spark):
+def test_gate_zero_drops_hint(spark, monkeypatch):
     df = spark.range(100).toDF("k")
-    os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"] = "0"
-    try:
-        out = gated_broadcast(df)
-        assert out is df and not _hinted(out)
-    finally:
-        del os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"]
+    monkeypatch.setattr(bcast, "GATE_BYTES", 0)
+    out = gated_broadcast(df)
+    assert out is df and not _hinted(out)
 
 
-def test_gate_probe_overrides_inflated_estimate(spark):
+def test_gate_probe_overrides_inflated_estimate(spark, monkeypatch):
     # join estimate multiplies children — far over any sane gate —
     # but the probe (the row-preserving base side) keeps the hint
     big_est = spark.range(200).toDF("k").join(
         spark.range(200).toDF("k"), "k"
     )
-    os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"] = "4000"
-    try:
-        assert not _hinted(gated_broadcast(big_est))
-        assert _hinted(
-            gated_broadcast(big_est, probe=spark.range(10).toDF("k"))
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"]
+    monkeypatch.setattr(bcast, "GATE_BYTES", 4000)
+    assert not _hinted(gated_broadcast(big_est))
+    assert _hinted(gated_broadcast(big_est, probe=spark.range(10).toDF("k")))
 
 
-def test_sql_hint_includes_only_gated_tables(spark, sf_dir):
+def test_sql_hint_includes_only_gated_tables(spark, sf_dir, monkeypatch):
     hint = sql_broadcast_hint(
         spark, sf_dir, {"c": "customer", "n": "nation", "r": "region"}
     )
     assert hint == "/*+ BROADCAST(c, n, r) */"
-    os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"] = "0"
-    try:
-        assert sql_broadcast_hint(spark, sf_dir, {"c": "customer"}) == ""
-    finally:
-        del os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"]
+    monkeypatch.setattr(bcast, "GATE_BYTES", 0)
+    assert sql_broadcast_hint(spark, sf_dir, {"c": "customer"}) == ""
 
 
-def test_q5_valid_with_empty_hint(spark, sf_dir):
+def test_q5_valid_with_empty_hint(spark, sf_dir, monkeypatch):
     # the f-string interpolation must yield valid SQL when the gate
     # strips every alias
     from feast_hive_spark.registry import REGISTRY
 
-    os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"] = "0"
-    try:
-        df = REGISTRY["q5_local_supplier_volume"][0](spark, sf_dir)
-        assert df.columns == ["n_name", "revenue"]
-        df.collect()
-    finally:
-        del os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"]
+    monkeypatch.setattr(bcast, "GATE_BYTES", 0)
+    df = REGISTRY["q5_local_supplier_volume"][0](spark, sf_dir)
+    assert df.columns == ["n_name", "revenue"]
+    df.collect()
 
 
 def test_default_gate_value():
-    assert gate_bytes() == DEFAULT_GATE_BYTES == 16 << 20
-
-
-def test_gate_env_suffix_and_malformed_values():
-    """Suffixed values parse ('16m' = 16 MiB); malformed ones fall
-    back to the default instead of crashing every gated build."""
-    import os
-
-    for val, expect in [
-        ("16m", 16 << 20), ("64MB", 64 << 20), ("1g", 1 << 30),
-        ("4096", 4096), ("512kb", 512 << 10),
-        ("sixteen", DEFAULT_GATE_BYTES), ("", DEFAULT_GATE_BYTES),
-    ]:
-        if val:
-            os.environ["SPARK_GRAFT_BCAST_GATE_BYTES"] = val
-        else:
-            os.environ.pop("SPARK_GRAFT_BCAST_GATE_BYTES", None)
-        try:
-            assert gate_bytes() == expect, val
-        finally:
-            os.environ.pop("SPARK_GRAFT_BCAST_GATE_BYTES", None)
+    assert bcast.GATE_BYTES == 16 << 20

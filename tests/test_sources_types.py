@@ -318,3 +318,30 @@ def test_bind_sql_view_stable_vs_connect_names(spark, sf_dir):
     b = bind_sql_view(FakeDF(), "__t_bind_probe")
     assert a != b and a.startswith("__t_bind_probe_c")
     assert recorded == [a, b]
+
+
+def test_cache_table_substitutes_into_fresh_parquet_read(spark, tmp_path):
+    """Two independent reads of one parquet path are the same plan to
+    Spark's CacheManager, so a cacheTable'd view is substituted into a
+    fresh read that never went through read_table's frame memo. The
+    memo (``_DF_CACHE``) earns its place by skipping each repeated
+    read's schema-inference job, not by enabling this substitution."""
+    from feast_hive_spark.sources.tables import read_parquet_micros
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(50).selectExpr("id", "id * 2 AS v").write.parquet(path)
+    a = read_parquet_micros(spark, path)
+    b = read_parquet_micros(spark, path)
+    assert a._jdf.queryExecution().analyzed().sameResult(
+        b._jdf.queryExecution().analyzed()
+    )
+    a.createOrReplaceTempView("__subst_probe")
+    spark.catalog.cacheTable("__subst_probe")
+    try:
+        fresh = read_parquet_micros(spark, path).repartition(8)
+        plan = fresh._jdf.queryExecution().withCachedData().toString()
+        assert "InMemoryRelation" in plan
+        assert fresh.count() == 50
+    finally:
+        spark.catalog.uncacheTable("__subst_probe")
+        spark.catalog.dropTempView("__subst_probe")
