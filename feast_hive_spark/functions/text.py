@@ -289,11 +289,6 @@ def shingles(col: str, n: int = 3) -> Column:
     return shingles_from(tokens_array(col), n)
 
 
-def shingle_hashes(col: str, n: int = 3) -> Column:
-    """H48 of each distinct shingle (see ``shingles`` perf caveat)."""
-    return shingle_hashes_from(tokens_array(col), n)
-
-
 def minhash_signature(hashes: Column) -> Column:
     """MinHash signature: array of per-hash-function minima over the
     shingle-hash set. Empty set -> MINHASH_MOD sentinels."""

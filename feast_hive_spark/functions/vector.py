@@ -118,11 +118,3 @@ def sign_planes(k: int, dim: int, seed: str = "jl") -> list[list[float]]:
         [1.0 if _md5_unit(seed, p, d) % 2 == 0 else -1.0 for d in range(dim)]
         for p in range(k)
     ]
-
-
-def dot_literal(vec: Column, coefs: list[float]) -> Column:
-    """JVM-side dot product of an array column against literal plane
-    coefficients — the Spark twin of :func:`duck_dot_literal` (same
-    sequential left-to-right summation)."""
-    arr = F.array(*[F.lit(float(c)) for c in coefs])
-    return dot(vec, arr)

@@ -112,24 +112,31 @@ def _guarded_candidates(candidates: DataFrame, threshold: int = _CANDIDATE_BROAD
     past the driver's broadcast budget and an unguarded
     ``F.broadcast`` hint became an OOM instead of a plan choice.
 
-    Probe with ``limit(threshold+1).collect()`` (at most threshold+1
-    two-long rows ever ship). Small case — the overwhelmingly common
-    one — ships the pairs ONCE and re-broadcasts a driver-local copy,
-    so the candidate plan never re-executes and the verify joins stay
-    shuffle-free. Overflow case falls back to the distributed plan
-    with NO broadcast hint: Spark/AQE picks a memory-safe join."""
+    Probe with ``limit(threshold+1).toArrow()`` (at most threshold+1
+    rows ever ship, as Arrow columns, never as Python rows). Small
+    case — the overwhelmingly common one — ships the pairs ONCE and
+    re-broadcasts a driver-local copy, so the candidate plan never
+    re-executes and the verify joins stay shuffle-free. Overflow case
+    falls back to the distributed plan with NO broadcast hint:
+    Spark/AQE picks a memory-safe join; the memo keeps only ``None``
+    for it, not the rows it threw away."""
+
+    def probe_table():
+        table = candidates.limit(threshold + 1).toArrow()
+        return table if table.num_rows <= threshold else None
+
     probe = job_memo(
         candidates.sparkSession,
         candidates,
         ("_guarded_candidates", threshold),
-        lambda: candidates.limit(threshold + 1).collect(),
+        probe_table,
     )
-    if len(probe) <= threshold:
-        local = local_frame(candidates.sparkSession, probe, candidates.schema)
-        if len(probe) > _LOCAL_CANDIDATE_ROWS:
-            local = ckpt.track(local.coalesce(1).localCheckpoint(eager=True))
-        return F.broadcast(local)
-    return candidates
+    if probe is None:
+        return candidates
+    local = local_frame(candidates.sparkSession, probe, candidates.schema)
+    if probe.num_rows > _LOCAL_CANDIDATE_ROWS:
+        local = ckpt.track(local.coalesce(1).localCheckpoint(eager=True))
+    return F.broadcast(local)
 
 
 def _exact_collapse(df: DataFrame, id_col: str, text_col: str):

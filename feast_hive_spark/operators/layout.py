@@ -103,144 +103,3 @@ def zorder_repartition(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-    format: str = "parquet",
-) -> None:
-    """Persist a table hash-bucketed (and optionally sorted) on its
-    join/aggregation keys — Spark's answer to Hive's CLUSTERED BY.
-
-    The 100 TB payoff: two tables bucketed the same way on the same
-    keys join with ZERO exchange on either side (and bucket-local
-    sort can elide the sort-merge sort too) — the shuffle is paid
-    once at write time, then every downstream join/groupBy on those
-    keys reads co-located buckets. This is the standard pre-shuffle
-    amortization for fact-to-fact joins that AQE cannot avoid at
-    query time. Requires a metastore table (``saveAsTable``): bucket
-    metadata lives in the catalog — a plain ``parquet(path)`` write
-    silently loses it (Spark would re-shuffle).
-
-    ``test_layout.py`` pins the property this exists for: a join of
-    two co-bucketed tables plans with no ShuffleExchange.
-    """
-    if not bucket_cols:
-        raise ValueError("bucket_cols must be non-empty")
-    writer = (
-        df.write.format(format)
-        .mode(mode)
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def compact_files(
-    spark,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    sort_cols: Sequence[str] | None = None,
-) -> dict:
-    """Small-file compaction for a parquet directory — the OPTIMIZE /
-    bin-packing maintenance step every long-lived table needs (years
-    of incremental appends leave thousands of KB-sized files whose
-    per-file open cost and starved row groups dominate scan time at
-    100 TB).
-
-    Rewrites the directory into ``ceil(total_bytes / target_bytes)``
-    files (optionally sorted, which also tightens zone maps — pair
-    with ``zorder_keys`` for multi-column locality) and swaps it in
-    with the same crash-safe two-rename protocol as the online-store
-    sink: write to ``<path>.__compact_tmp``, move the live dir aside,
-    move tmp in, drop the aside. An orphaned aside from a crash
-    between the renames is restored on the next call before anything
-    is read (the streaming-sink lesson: a swap is only crash-safe if
-    startup repairs the half-swapped state).
-
-    All filesystem operations go through the Hadoop FileSystem API,
-    so the same code runs on HDFS/S3A/local. Returns
-    ``{files_before, files_after, bytes, rows}``.
-
-    Scope: the path is treated as ONE flat table. For a
-    hive-partitioned directory, compact each leaf partition
-    directory individually — compacting the root would rewrite the
-    partition columns into the data files and flatten the layout.
-    """
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        spark._jsc.hadoopConfiguration()
-    )
-    HPath = jvm.org.apache.hadoop.fs.Path
-    live, tmp, aside = HPath(path), HPath(path + ".__compact_tmp"), HPath(
-        path + ".__compact_old"
-    )
-    # crash recovery: aside exists but live is gone -> restore
-    if fs.exists(aside) and not fs.exists(live):
-        if not fs.rename(aside, live):
-            raise IOError(f"could not restore {aside} -> {live}")
-    for leftover in (tmp, aside):
-        if fs.exists(leftover):
-            fs.delete(leftover, True)
-
-    def _data_files(p):
-        out = []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if st.isFile() and not name.startswith(("_", ".")):
-                out.append((name, st.getLen()))
-        return out
-
-    before = _data_files(live)
-    total = sum(sz for _, sz in before) or 1
-    n_out = max(1, -(-total // target_bytes))
-
-    df = spark.read.parquet(path)
-    rows = df.count()
-    if sort_cols:
-        out = df.repartitionByRange(n_out, *[F.col(c) for c in sort_cols])
-        out = out.sortWithinPartitions(*sort_cols)
-    else:
-        out = df.coalesce(n_out) if n_out < 200 else df.repartition(n_out)
-    out.write.mode("overwrite").parquet(path + ".__compact_tmp")
-
-    if not fs.rename(live, aside):
-        raise IOError(f"could not move {live} aside")
-    if not fs.rename(tmp, live):
-        fs.rename(aside, live)  # roll back
-        raise IOError(f"could not move {tmp} into place")
-    fs.delete(aside, True)
-    after = _data_files(live)
-    return {
-        "files_before": len(before),
-        "files_after": len(after),
-        "bytes": int(total),
-        "rows": int(rows),
-    }
-
-
-def table_file_report(spark, path: str) -> DataFrame:
-    """Per-file observability for a parquet directory: rows and a
-    fragmentation summary straight from the data plane
-    (``input_file_name`` grouping — no driver-side listing, so the
-    report scales with the cluster, not the namenode). The natural
-    companion to :func:`compact_files`: run the report, decide, then
-    compact. Output: one row per file ``(file, n_rows)`` with the
-    basename only (stable across fs schemes/prefixes).
-
-    tests/test_layout.py pins the counts against DuckDB's
-    ``parquet_file_metadata`` on the same directory — an independent
-    reader of the parquet footers."""
-    df = spark.read.parquet(path)
-    return (
-        df.groupBy(
-            F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1).alias("file")
-        )
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )

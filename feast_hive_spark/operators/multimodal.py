@@ -6,9 +6,8 @@ shapes, partition behavior — is real and tested, and since round 3 the
 image path is really decoded too:
 
 - **PNG decode/encode is native** via the stdlib codec in
-  ``functions/png.py`` (zlib+struct; no PIL needed) — feature
-  extraction, pixel stats and resize operate on real pixels for PNG
-  payloads;
+  ``functions/png.py`` (zlib+struct; no PIL needed) — pixel stats,
+  hashing and resize operate on real pixels for PNG payloads;
 - **baseline JPEG decode/encode is native too** (``functions/
   jpeg.py``: SOF0, 8-bit, grayscale/YCbCr, 4:4:4/4:2:2/4:2:0,
   restart markers); progressive/arithmetic JPEGs fall through the
@@ -18,12 +17,13 @@ image path is really decoded too:
 - **integer-PCM WAV decode/encode is native** (``functions/wav.py``:
   8/16/32-bit, any channel count; float-PCM/ADPCM gated) —
   ``audio_amplitude_stats`` runs on real samples;
-- the remaining formats (compressed audio, video frames) use
-  PIL/soundfile if importable; otherwise ``allow_fake=True`` switches those payloads to
-  a *deterministic fake* (features derived from md5 of the bytes) so
+- the remaining formats use PIL if importable; otherwise
+  ``resize_images(allow_fake=True)`` switches those payloads to a
+  *deterministic fake* thumbnail (an md5 keystream of the bytes) so
   the pipeline shape is exercised end-to-end, and ``allow_fake=False``
   raises ``NotImplementedError`` at execution — the clearly-marked
-  remaining stub boundary.
+  remaining stub boundary; ``decode_status`` reports which payloads
+  would take it.
 
 Scale notes: decode is the textbook Pandas-UDF case — pure Python
 per-item work, Arrow-batched, embarrassingly parallel. The operators
@@ -125,103 +125,6 @@ def _decode_image(payload: bytes) -> np.ndarray | None:
         except Exception:  # noqa: BLE001
             return None
     return None
-
-
-def _fake_features(payload: bytes, dim: int) -> np.ndarray:
-    """Deterministic fake 'decoder': dim floats in [-1, 1) derived from
-    md5(payload || i). Stands in for a real image/audio feature
-    extractor with identical schema/batch behavior."""
-    out = np.empty(dim, dtype=np.float32)
-    for i in range(dim):
-        h = int(hashlib.md5(payload + i.to_bytes(4, "big")).hexdigest()[:12], 16)
-        out[i] = (h % 2000) / 1000.0 - 1.0
-    return out
-
-
-def _pixel_features(img: np.ndarray, dim: int) -> np.ndarray:
-    """Real image features: [width, height, mean, std] + an
-    (dim-4)-bin intensity histogram (fractions in [0, 1])."""
-    flat = img.astype(np.float64).ravel()
-    head = [img.shape[1], img.shape[0], flat.mean(), flat.std()]
-    n_bins = max(dim - 4, 0)
-    if n_bins:
-        hist, _ = np.histogram(flat, bins=n_bins, range=(0.0, 256.0))
-        head.extend(hist / flat.size)
-    return np.asarray(head[:dim], dtype=np.float32)
-
-
-def _audio_features(
-    frames: np.ndarray, rate: int, dim: int
-) -> np.ndarray:
-    """Real audio features: [n_frames, n_channels, rate, mean |amp|]
-    + a (dim-4)-bin |amplitude| histogram (fractions of samples)."""
-    amp = np.abs(frames).astype(np.float64).ravel()
-    head = [
-        frames.shape[0],
-        frames.shape[1],
-        rate,
-        amp.mean() if amp.size else 0.0,
-    ]
-    n_bins = max(dim - 4, 0)
-    if n_bins and amp.size:
-        top = max(float(amp.max()), 1.0)
-        hist, _ = np.histogram(amp, bins=n_bins, range=(0.0, top + 1.0))
-        head.extend(hist / amp.size)
-    else:
-        head.extend([0.0] * n_bins)
-    return np.asarray(head[:dim], dtype=np.float32)
-
-
-def extract_features(
-    df: DataFrame,
-    binary_col: str,
-    id_col: str,
-    dim: int = 16,
-    allow_fake: bool = True,
-) -> DataFrame:
-    """Per-item feature extraction via ``mapInPandas`` (Arrow batches).
-
-    Decodable images (PNG/JPEG/GIF natively; more with PIL) yield REAL
-    pixel features ([w, h, mean, std] + intensity histogram); WAV
-    payloads yield REAL audio features ([frames, channels, rate,
-    mean |amp|] + amplitude histogram). Payloads no codec handles
-    either fall back to the deterministic fake (``allow_fake=True``)
-    or raise ``NotImplementedError`` at execution.
-    Output: (id, feature array<float>, n_bytes)."""
-    from feast_hive_spark.functions import wav
-
-    schema = f"{id_col} long, feature array<float>, n_bytes long"
-
-    def one(payload: bytes) -> np.ndarray:
-        img = _decode_image(payload)
-        if img is not None:
-            return _pixel_features(img, dim)
-        try:
-            frames, rate = wav.decode(payload)
-            return _audio_features(frames, rate, dim)
-        except ValueError:
-            pass
-        if not allow_fake:
-            raise NotImplementedError(
-                "no codec for this payload (PNG/JPEG/GIF/WAV are native; "
-                "other formats need PIL/soundfile, absent in this "
-                "container); pass allow_fake=True for the deterministic "
-                "stub"
-            )
-        return _fake_features(payload, dim)
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raw = [b if isinstance(b, bytes) else bytes(b) for b in pdf[binary_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "feature": [one(b).tolist() for b in raw],
-                    "n_bytes": [len(b) for b in raw],
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(mapper, schema)
 
 
 def image_pixel_stats(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:

@@ -24,11 +24,15 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     (~2 us a row), so a plan that re-executes with ~10k+ local rows
     may be cheaper with a pin (``dedup._guarded_candidates``).
 
-    ``schema`` is a ``StructType`` or a DDL string. Timestamps are
+    ``schema`` is a ``StructType`` or a DDL string. ``rows`` is an
+    iterable of tuples or a ``pa.Table`` (e.g. ``DataFrame.toArrow()``,
+    which then needs no per-row conversion). Timestamps in tuples are
     naive datetimes in the session time zone (UTC, which the engine
     pins), the form ``collect()`` returns them in."""
     if not isinstance(schema, StructType):
         schema = StructType.fromDDL(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema)
     arrow = to_arrow_schema(schema, timestamp_utc=False)
     rows = list(rows)
     cols = list(zip(*rows)) if rows else [()] * len(arrow)

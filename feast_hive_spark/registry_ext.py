@@ -5340,12 +5340,12 @@ def jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1/sqrt(k); the audit certifies the ACTUAL spread so the
     downstream threshold (e.g. a dedup radius) can be widened
     accordingly. All arithmetic is the vector family's sequential
-    double fold (functions/vector.dot / dot_literal) so the DuckDB
-    twin is bit-comparable; pairing is id-adjacency (linear, no
-    quadratic pair production), output is bin-bounded. The 16
-    projections evaluate as 16 literal-array folds over ONE staged
-    difference column inside whole-stage codegen — no UDF, no
-    shuffle before the final 40-row aggregate."""
+    double fold (the left-to-right summation of functions/vector.dot)
+    so the DuckDB twin is bit-comparable; pairing is id-adjacency
+    (linear, no quadratic pair production), output is bin-bounded.
+    The 16 projections evaluate as per-column numpy folds over ONE
+    difference matrix in a map-only kernel — no shuffle before the
+    final 40-row aggregate."""
     emb = read_table(spark, sf_dir, "embeddings")
     k, dim, bin_width = 16, 64, 50000
     planes = V.sign_planes(k, dim, seed="jl")

@@ -123,6 +123,9 @@ def read_online(
     directories (partition pruning), then an exact key filter."""
     snap = spark.read.parquet(path)
     rows = [tuple(k) for k in entity_keys]
+    if not rows:  # nothing to look up: the lookup's columns, no rows
+        rest = [c for c in snap.columns if c not in (*join_key_columns, "__bucket")]
+        return snap.select(*join_key_columns, *rest).limit(0)
     keys_df = spark.createDataFrame(rows, list(join_key_columns))
     # Align key dtypes with the snapshot before hashing: Murmur3
     # F.hash() is type-sensitive (hash(1 as int) != hash(1 as bigint)),

@@ -1,4 +1,5 @@
-"""Structured Streaming ingest of the events table (SURVEY §7).
+"""Structured Streaming ingest of the events and documents tables
+(SURVEY §7).
 
 The reference has no streaming at all (SURVEY §2.6); this module is
 the engine's streaming extension, built on the idiomatic stack:
@@ -8,9 +9,11 @@ semantics are cross-checkable.
 
 Scale notes: windowed aggs with watermarks keep state bounded (late
 rows beyond the watermark are dropped); state is hash-partitioned by
-(window, keys) across executors. `sessionize` shows
-``applyInPandasWithState`` for custom per-key state machines —
-timeouts evict idle keys, so state is O(active keys) not O(events).
+(window, keys) across executors. `stream_heavy_hitters` shows
+``applyInPandasWithState`` for a custom per-key state machine whose
+state is O(buckets x capacity), not O(events). The stream-static
+operators (`stream_pit_probe`, `stream_duplicate_anchor_flags`) hold
+no streaming state at all.
 """
 
 from __future__ import annotations
@@ -96,37 +99,6 @@ def windowed_counts(
     )
 
 
-def enrich_stream(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str,
-    group_col: str,
-    window: str = "1 day",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-static enrichment: join the event stream to a static
-    dimension (broadcast — Spark re-resolves the static side per
-    micro-batch, so a slowly-refreshed dim table picks up updates
-    without restarting the query), then windowed counts/sums per
-    dimension attribute. The join adds NO streaming state; only the
-    windowed aggregate holds state, bounded by the watermark."""
-    joined = events.join(F.broadcast(dim), on)
-    return (
-        joined.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            group_col,
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def sessionize(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:
@@ -148,112 +120,6 @@ def sessionize(
             "sum_value",
         )
     )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: a
-    per-user running (count, sum) state machine, emitting the updated
-    totals on every micro-batch.
-
-    This is the escape hatch for semantics the built-in windowed aggs
-    can't express (arbitrary per-key state transitions). State is
-    hash-partitioned by key across executors and lives in the state
-    store; with a timeout configured, idle keys are evicted so state
-    stays O(active keys). Arrow-batched like any Pandas UDF."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_value": [round(s, 2)]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events long, sum_value double",
-        stateStructType="n long, s double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    key_cols: tuple[str, ...] = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact-dedup on arrival keys — idempotent ingest for
-    at-least-once upstreams (kafka redeliveries, file re-drops), the
-    streaming twin of ``operators/dedup.py:exact_dedup``.
-
-    ``dropDuplicatesWithinWatermark`` keeps one state entry per key
-    seen inside the watermark horizon and EVICTS it once event time
-    passes key_ts + watermark — state is bounded by the duplicate
-    window, not stream lifetime (a plain ``dropDuplicates`` on a
-    stream would grow state forever). Duplicates arriving later than
-    the watermark are by-contract re-emitted; size the watermark to
-    the upstream's redelivery window."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
-
-
-def stream_interval_join(
-    events: DataFrame,
-    window_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream inner self-join with an event-time interval
-    condition: every (purchase, click) pair whose timestamps lie
-    within ±``window_seconds`` — the streaming twin of the batch
-    ``interval_overlap_counts`` decomposition.
-
-    Stream-stream joins REQUIRE an equality predicate (state is keyed
-    by it), which is exactly what the batch operator's binned
-    decomposition provides: clicks hash into window-sized time bins,
-    purchases probe their 3 adjacent bins (sequence+explode), the join
-    keys on the bin, and the exact interval predicate runs as the
-    residual condition. Both sides carry watermarks and the time
-    condition bounds both event times, so Spark derives a finite
-    state-retention window per side and evicts buffered rows the
-    watermark has passed — state is O(rows per active bin), not
-    O(stream). Append-mode output; pairs emit as both sides arrive."""
-    bin_us = window_seconds * 1_000_000
-    p = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("probe_id"), F.col("ts").alias("p_ts")
-        )
-        .withWatermark("p_ts", watermark)
-        .withColumn(
-            "__bin",
-            F.explode(
-                F.sequence(
-                    F.floor((F.unix_micros("p_ts") - bin_us) / bin_us),
-                    F.floor((F.unix_micros("p_ts") + bin_us) / bin_us),
-                )
-            ),
-        )
-    )
-    c = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts")
-        )
-        .withWatermark("c_ts", watermark)
-        .withColumn("__bin", F.floor(F.unix_micros("c_ts") / bin_us))
-    )
-    cond = (p["__bin"] == c["__bin"]) & F.col("c_ts").between(
-        F.col("p_ts") - F.expr(f"INTERVAL {window_seconds} SECOND"),
-        F.col("p_ts") + F.expr(f"INTERVAL {window_seconds} SECOND"),
-    )
-    return p.join(c, cond, "inner").drop("__bin")
 
 
 def stream_click_attribution(
@@ -369,86 +235,6 @@ def stream_pit_probe(
     )
 
 
-def sessionize_stateful(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Custom stateful sessionizer via ``applyInPandasWithState`` with
-    **event-time timeout eviction** — the full custom-operator shape
-    that the built-in ``session_window`` hides: explicit per-key state
-    (open session aggregates), explicit close conditions, and state
-    that cannot grow unboundedly because idle keys are evicted when
-    the watermark passes their session gap.
-
-    A key's open session extends while events arrive within
-    ``gap_seconds`` of its last event; an in-batch gap closes and
-    emits the previous session immediately; otherwise the session is
-    emitted when the event-time timeout fires (watermark >
-    last_event + gap). Emitted rows are CLOSED sessions only — the
-    exactly-once append-mode contract. State per key is four scalars,
-    hash-partitioned across executors."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = gap_seconds * 1_000_000
-
-    def update(key, pdfs, state: GroupState):
-        closed = []
-        if state.hasTimedOut:
-            start_us, last_us, n, s = state.get
-            closed.append((key[0], start_us, last_us, n, s))
-            state.remove()
-        else:
-            times, values = [], []
-            for pdf in pdfs:
-                # pandas ns epoch -> us
-                times.extend(int(t.value) // 1000 for t in pd.to_datetime(pdf[ts_col]))
-                values.extend(float(v) if v == v else 0.0 for v in pdf[value_col])
-            order = sorted(range(len(times)), key=lambda i: times[i])
-            if state.exists:
-                start_us, last_us, n, s = state.get
-            else:
-                start_us, last_us, n, s = None, None, 0, 0.0
-            for i in order:
-                t_us = times[i]
-                if last_us is not None and t_us - last_us > gap_us:
-                    closed.append((key[0], start_us, last_us, n, s))
-                    start_us, last_us, n, s = None, None, 0, 0.0
-                if start_us is None:
-                    start_us = t_us
-                last_us = t_us
-                n += 1
-                s += values[i]
-            if start_us is not None:
-                state.update((start_us, last_us, n, s))
-                # evict when the watermark passes last_event + gap
-                state.setTimeoutTimestamp((last_us + gap_us) // 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    key_col: [c[0] for c in closed],
-                    "session_start": [pd.Timestamp(c[1], unit="us") for c in closed],
-                    "session_last_event": [pd.Timestamp(c[2], unit="us") for c in closed],
-                    "n_events": [c[3] for c in closed],
-                    "sum_value": [round(c[4], 2) for c in closed],
-                }
-            )
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} long, session_start timestamp, "
-            "session_last_event timestamp, n_events long, sum_value double"
-        ),
-        stateStructType="start_us long, last_us long, n long, s double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def stream_to_online(
     events: DataFrame,
     path: str,
@@ -553,111 +339,6 @@ def stream_to_online(
             if had_old:
                 shutil.rmtree(aside, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
-
-    writer = (
-        events.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
-
-
-def stream_to_sketches(
-    events: DataFrame,
-    path: str,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    id_col: str = "user_id",
-    checkpoint_dir: str | None = None,
-) -> "object":
-    """Continuously maintain the per-(key, day) HLL sketch table
-    (operators/sketches.py) from an event stream via ``foreachBatch``:
-    each micro-batch's rows are sketched and UNIONED into the persisted
-    sketch table, so any distinct-count rollup is answerable at any
-    time without rescanning history — the streaming half of the
-    sketch-once/rollup-forever pattern.
-
-    The merge is a full read-union-rewrite of the sketch table, which
-    is sound because the table is tiny by construction (#keys × #days
-    rows of ~KB sketches, independent of event volume); at millions of
-    keys you'd switch to the bucket-incremental swap exactly as
-    ``stream_to_online`` does. The rewrite uses rename-aside promotion
-    with START-OF-UPSERT recovery: POSIX rename can't atomically swap
-    a non-empty directory, so a crash in the instant between "live
-    renamed aside" and "replacement promoted" can leave no live table
-    — the next upsert detects the orphaned aside and restores it
-    BEFORE reading/merging, so committed history is never rebuilt from
-    a lone micro-batch.  (In-process exceptions additionally roll the
-    aside back immediately.)
-
-    Exactly-once without transactions: HLL union is semantically
-    IDEMPOTENT (the sketch is a set summary — re-observing the same
-    items changes no estimate), so a checkpoint-driven replay of a
-    micro-batch converges to a table with identical estimates; the
-    serialized bytes may differ because DataSketches re-unioning can
-    switch internal representation.  Returns the StreamingQuery."""
-    import shutil
-    from pathlib import Path
-
-    from pyspark.errors import AnalysisException
-
-    from feast_hive_spark.operators.sketches import hll_daily_sketches
-
-    import re
-
-    def _recover(live: "Path") -> None:
-        """Crash recovery before any read: if a previous run died
-        after renaming the live table aside but before promoting its
-        replacement, restore the newest aside; if the live table
-        exists, any leftover asides are stale — drop them."""
-        asides = sorted(
-            live.parent.glob(live.name + ".epoch*.old"),
-            key=lambda p: int(
-                re.search(r"\.epoch(\d+)\.old$", p.name).group(1)
-            ),
-        )
-        if not asides:
-            return
-        if live.exists():
-            for a in asides:
-                shutil.rmtree(a, ignore_errors=True)
-        else:
-            asides[-1].rename(live)
-            for a in asides[:-1]:
-                shutil.rmtree(a, ignore_errors=True)
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover(Path(path))
-        batch_sk = hll_daily_sketches(batch_df, key_cols, ts_col, id_col)
-        merged = batch_sk
-        if Path(path).exists():
-            try:
-                existing = spark.read.parquet(path)
-                merged = existing.unionByName(batch_sk)
-            except AnalysisException:
-                pass  # empty dir from a cancelled first write
-        final = (
-            merged.groupBy(*key_cols, "day")
-            .agg(F.hll_union_agg(F.col("sketch")).alias("sketch"))
-            .coalesce(1)
-        )
-        tmp = path + f".epoch{epoch_id}"
-        final.write.mode("overwrite").parquet(tmp)
-        aside = path + f".epoch{epoch_id}.old"
-        had_old = Path(path).exists()
-        if had_old:
-            Path(path).rename(aside)
-        try:
-            Path(tmp).rename(path)
-        except BaseException:
-            if had_old and not Path(path).exists():
-                Path(aside).rename(path)
-            raise
-        if had_old:
-            shutil.rmtree(aside, ignore_errors=True)
 
     writer = (
         events.writeStream.outputMode("update")
@@ -803,114 +484,6 @@ def topk_from_buckets(
         latest.select(F.col(item_col).alias("item"), "est_count", "err")
         .orderBy(F.col("est_count").desc(), F.col("item"))
         .limit(k)
-    )
-
-
-def _banded_signatures(
-    docs: DataFrame, id_col: str, text_col: str, n: int, bands: int
-) -> DataFrame:
-    """(id, full signature, band, band key) rows — shared by both
-    sides of the stream-static near-dup join. Stateless per row."""
-    from feast_hive_spark.functions import text as X
-
-    rows_per_band = len(X.MINHASH_COEFS) // bands
-    with_sh = docs.select(
-        F.col(id_col), X.tokens_array(text_col).alias("__tk")
-    ).select(
-        F.col(id_col), X.shingle_hashes_from(F.col("__tk"), n).alias("__sh")
-    )
-    sigs = with_sh.select(
-        id_col, "__sh", X.minhash_signature(F.col("__sh")).alias("__sig")
-    )
-    band_keys = []
-    for bi in range(bands):
-        lo = bi * rows_per_band
-        band_keys.append(
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col("__sig")[i].cast("string")
-                        for i in range(lo, lo + rows_per_band)
-                    ],
-                )
-            )
-        )
-    return sigs.select(
-        id_col,
-        "__sh",
-        "__sig",
-        F.posexplode(F.array(*band_keys)).alias("__band", "__bkey"),
-    )
-
-
-def stream_near_dup_flags(
-    doc_stream: DataFrame,
-    index_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Streaming near-duplicate detection against a STATIC corpus
-    index — online decontamination / dedup-at-ingest: every arriving
-    document is MinHash-banded and joined against the banded index
-    (a stream-static equi join on the band key: per-microbatch, NO
-    streaming state), candidates are verified with exact Jaccard on
-    the carried shingle sets, and each (arrival, index) pair is
-    emitted exactly once WITHOUT a stateful distinct: both sides
-    carry their full signatures, so the duplicate emissions a
-    multi-band agreement would cause are cut by keeping only the
-    FIRST agreeing band (recomputed row-wise post-join from the two
-    signatures — pure expression, no state). The batch twin of the
-    verification semantics is operators/dedup.minhash_lsh_pairs; the
-    batch twin of the use case is registry:decontaminate_vs_benchmark.
-
-    At scale the static index is precomputed once (and broadcast when
-    it fits); per-microbatch cost is banding the arrivals + one equi
-    join — no all-pairs anywhere, no state to evict.
-
-    Output (append mode): ``(doc_id, match_id, jaccard)``.
-    """
-    from feast_hive_spark.functions import text as X
-
-    k = len(X.MINHASH_COEFS)
-    rows_per_band = k // bands
-    s = _banded_signatures(doc_stream, id_col, text_col, n, bands)
-    ix = _banded_signatures(index_docs, id_col, text_col, n, bands).select(
-        F.col(id_col).alias("__ix_id"),
-        F.col("__sh").alias("__ix_sh"),
-        F.col("__sig").alias("__ix_sig"),
-        "__band",
-        "__bkey",
-    )
-    joined = s.join(ix, ["__band", "__bkey"])
-    first_band = (
-        F.array_position(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(bands)),
-                lambda bi: F.slice("__sig", (bi - 1) * rows_per_band + 1, rows_per_band)
-                == F.slice("__ix_sig", (bi - 1) * rows_per_band + 1, rows_per_band),
-            ),
-            F.lit(True),
-        )
-        - 1
-    )
-    inter = F.size(F.array_intersect("__sh", "__ix_sh"))
-    union = F.size(F.array_union("__sh", "__ix_sh"))
-    return (
-        joined.filter(F.col("__band") == first_band)
-        .withColumn(
-            "jaccard",
-            F.round(inter.cast("double") / F.greatest(union, F.lit(1)), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col(id_col),
-            F.col("__ix_id").alias("match_id"),
-            "jaccard",
-        )
     )
 
 

@@ -312,21 +312,45 @@ def test_containment_directionality(spark):
     assert jac == 0  # the union swallows the overlap
 
 
-def test_guarded_candidates_small_and_overflow_paths(spark):
+def test_guarded_candidates_small_and_overflow_paths(spark, monkeypatch):
     """Both guard paths must return identical pair sets: the small case
-    re-broadcasts a driver-local copy, the overflow case hands back the
-    distributed plan unhinted (the r6 scale-harness OOM fix)."""
+    runs one probe job and re-broadcasts a driver-local copy (a
+    LocalRelation), the overflow case hands back the distributed plan
+    unhinted (the r6 scale-harness OOM fix) and memoizes a marker,
+    never the rows it threw away."""
+    from feast_hive_spark.plans import memo
+
+    monkeypatch.setattr(memo, "_MEMO", [])
     cand = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
     )
-    small = D._guarded_candidates(cand, threshold=10)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, "guarded candidates probe")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    small, n_small = jobs(
+        "guarded_small", lambda: D._guarded_candidates(cand, threshold=10)
+    )
+    assert n_small == 1
+    plan = small._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan")
     rows_small = sorted(tuple(r) for r in small.collect())
-    over = D._guarded_candidates(cand, threshold=2)
+    over, n_over = jobs(
+        "guarded_over", lambda: D._guarded_candidates(cand, threshold=2)
+    )
+    assert n_over == 1
     rows_over = sorted(tuple(r) for r in over.collect())
     assert rows_small == rows_over == [(1, 2), (2, 3), (3, 4), (4, 5)]
     # overflow path must NOT have collected/replaced the plan: it is
     # the same DataFrame object, with no broadcast hint applied
     assert over is cand
+    assert len(memo._MEMO) == 2 and memo._MEMO[-1][-1] is None
 
 
 def test_simhash_pairs_survive_heavy_duplication(spark):

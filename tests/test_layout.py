@@ -88,108 +88,3 @@ def test_zorder_degenerate_and_guards(spark):
         L.zorder_keys(df, [], bits=4)
     with pytest.raises(ValueError):
         L.zorder_keys(df, ["c", "v"], bits=32)
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    """The property write_bucketed exists for: co-bucketed tables join
-    with zero exchange on either side (the shuffle was paid at write
-    time), and results match the plain join."""
-    facts = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
-    )
-    dims = spark.range(0, 500).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("w")
-    )
-    L.write_bucketed(facts, "bk_facts", ["k"], 8, sort_cols=["k"])
-    L.write_bucketed(dims, "bk_dims", ["k"], 8, sort_cols=["k"])
-    try:
-        ta, tb = spark.table("bk_facts"), spark.table("bk_dims")
-        # force the non-broadcast path so the bucket layout, not a
-        # broadcast, is what elides the exchanges
-        joined = ta.hint("merge").join(tb, "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan.replace("ReusedExchange", "")
-        assert joined.count() == 500
-        got = {r["k"]: (r["v"], r["w"]) for r in joined.collect()}
-        assert got[42] == (0, 126)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bk_facts")
-        spark.sql("DROP TABLE IF EXISTS bk_dims")
-
-
-def test_compact_files_roundtrip_and_recovery(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "frag")
-    src = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") % 97).alias("v")
-    )
-    src.repartition(40).write.parquet(path)  # 40 tiny files
-    before = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-
-    stats = L.compact_files(spark, path, target_bytes=1 << 30)
-    assert stats["files_before"] >= 40
-    assert stats["files_after"] == 1
-    assert stats["rows"] == 10_000
-    after = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert after == before
-
-    # crash window: live dir gone, aside holds the data -> next call
-    # must restore it before compacting
-    os.rename(path, path + ".__compact_old")
-    stats2 = L.compact_files(spark, path, target_bytes=1 << 30)
-    assert stats2["rows"] == 10_000
-    assert {r["k"]: r["v"] for r in spark.read.parquet(path).collect()} == before
-
-    # sorted compaction tightens layout and preserves data
-    stats3 = L.compact_files(spark, path, target_bytes=1024, sort_cols=["k"])
-    assert stats3["files_after"] > 1
-    assert {r["k"]: r["v"] for r in spark.read.parquet(path).collect()} == before
-
-
-def test_table_file_report_matches_parquet_footers(spark, tmp_path):
-    import duckdb
-
-    path = str(tmp_path / "filerep")
-    spark.range(0, 5000).select(
-        F.col("id"), (F.col("id") % 13).alias("v")
-    ).repartition(6).write.parquet(path)
-    got = {
-        r["file"]: r["n_rows"]
-        for r in L.table_file_report(spark, path).collect()
-    }
-    exp = {
-        f.rsplit("/", 1)[-1]: n
-        for f, n in duckdb.connect()
-        .execute(
-            f"SELECT file_name, num_rows FROM parquet_file_metadata('{path}/*.parquet')"
-        )
-        .fetchall()
-    }
-    assert got == exp
-    assert sum(got.values()) == 5000
-    assert len(got) == 6
-
-
-def test_compact_sorted_files_have_disjoint_ranges(spark, tmp_path):
-    """Sorted compaction must produce files whose [min,max] key ranges
-    do not overlap — the zone-map-tightness property that makes range
-    predicates prune files."""
-    import duckdb
-
-    path = str(tmp_path / "zonemap")
-    spark.range(0, 20_000).select(
-        (F.col("id") * 2654435761 % 1_000_003).alias("k"),
-        F.col("id").alias("v"),
-    ).repartition(10).write.parquet(path)
-    stats = L.compact_files(spark, path, target_bytes=40_000, sort_cols=["k"])
-    assert stats["files_after"] > 1
-    ranges = duckdb.connect().execute(
-        f"""SELECT filename, MIN(k), MAX(k)
-            FROM read_parquet('{path}/*.parquet', filename=true)
-            GROUP BY filename ORDER BY 2"""
-    ).fetchall()
-    for (f1, lo1, hi1), (f2, lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, f"{f1} [{lo1},{hi1}] overlaps {f2} [{lo2},{hi2}]"
-    assert spark.read.parquet(path).count() == 20_000

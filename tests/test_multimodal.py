@@ -35,30 +35,6 @@ def test_attach_metadata(media):
     assert by_id.loc[4, "content_md5"] == hashlib.md5(b"plain bytes").hexdigest()
 
 
-def test_extract_features_deterministic(media):
-    got = M.extract_features(media, "payload", "media_id", dim=8).toPandas()
-    assert len(got) == 4
-    assert all(len(f) == 8 for f in got.feature)
-    # deterministic: same payload -> same features
-    again = M.extract_features(media, "payload", "media_id", dim=8).toPandas()
-    a = [list(f) for f in got.sort_values("media_id").feature]
-    b = [list(f) for f in again.sort_values("media_id").feature]
-    assert a == b
-    # matches the documented fake derivation
-    exp0 = M._fake_features(b"plain bytes", 8)
-    got4 = got[got.media_id == 4].feature.iloc[0]
-    assert list(got4) == pytest.approx(list(exp0))
-
-
-def test_extract_features_stub_gate(media):
-    # the fixture's pseudo-PNG (valid magic, garbage body) is not
-    # decodable, so with allow_fake=False the stub boundary raises at
-    # execution (surfaced by Spark as a PythonException wrapper)
-    if not M._HAS_PIL:
-        with pytest.raises(Exception, match="no codec for this payload"):
-            M.extract_features(media, "payload", "media_id", allow_fake=False).collect()
-
-
 # ------------------------------------------------------------ real PNG decode
 
 
@@ -132,22 +108,6 @@ def test_png_decode_all_filters():
         + chunk(b"IEND", b"")
     )
     assert (png.decode(data) == img).all()
-
-
-def test_extract_features_real_pixels(spark):
-    df, arrays = _png_media(spark)
-    got = M.extract_features(df, "payload", "media_id", dim=8).toPandas()
-    for _, r in got.iterrows():
-        a = arrays[r.media_id].astype(np.float64)
-        if a.ndim == 2:
-            a = a[:, :, None]
-        flat = a.ravel()
-        f = list(r.feature)
-        assert f[0] == a.shape[1] and f[1] == a.shape[0]
-        assert f[2] == pytest.approx(flat.mean(), rel=1e-6)
-        assert f[3] == pytest.approx(flat.std(), rel=1e-6)
-        hist, _ = np.histogram(flat, bins=4, range=(0.0, 256.0))
-        assert f[4:] == pytest.approx(list(hist / flat.size), rel=1e-6)
 
 
 def test_image_pixel_stats_exact(spark):
@@ -247,38 +207,19 @@ def test_image_ahash_bands_and_pairs(spark):
     assert not any(4 in p for p in pairs)
 
 
-def test_extract_features_real_audio(spark):
-    from feast_hive_spark.functions import wav
-
-    s = np.array([[100, -200], [300, -400], [500, -600]], dtype=np.int64)
-    payload = wav.encode(s, sample_rate=22050, width=2)
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_id": [1], "payload": [payload]})
-    )
-    feat = list(
-        M.extract_features(df, "payload", "media_id", dim=8)
-        .collect()[0]["feature"]
-    )
-    assert feat[:3] == [3.0, 2.0, 22050.0]
-    assert feat[3] == pytest.approx(np.abs(s).mean())
-    assert sum(feat[4:]) == pytest.approx(1.0)  # histogram fractions
-
-
-def test_extract_features_survives_truncated_real_payloads(spark):
+def test_decode_status_survives_truncated_real_payloads(spark):
     """ADVICE r4: truncated/malformed JPEG/GIF/WAV payloads used to
     escape the ValueError fallback chain as IndexError/struct.error
     and crash the whole Spark task. With codec-boundary
-    normalization, extract_features(allow_fake=True) must fall back
-    to the deterministic fake for every corrupt payload."""
-    import numpy as np
-
+    normalization every corrupt payload is answered, and the ones
+    no codec can read report 'gated' (the stub boundary)."""
     from feast_hive_spark.functions import gif, jpeg, wav
 
     img = np.full((16, 16, 3), [10, 200, 90], dtype=np.uint8)
     full_j = jpeg.encode(img, qluma=2, qchroma=4)
     full_g = gif.encode(img)
     full_w = wav.encode(np.zeros((64, 1), dtype=np.int16), 8000)
-    # (payload, must_fall_back_to_fake): tail cuts can still decode
+    # (payload, must_be_gated): tail cuts can still decode
     # legitimately (JPEG minus EOI has a complete scan; WAV tolerates
     # a truncated data chunk by design), so only the cuts that land
     # inside headers/entropy data are guaranteed-undecodable
@@ -293,30 +234,19 @@ def test_extract_features_survives_truncated_real_payloads(spark):
         (full_w[: len(full_w) // 3], False),  # partial data chunk ok
         (full_w[:-3], False),
     ]
-    rows = []
-    fake_expected = []
-    mid = 0
-    for payload, must_fake in cases:
-        rows.append((mid, payload))
-        if must_fake:
-            fake_expected.append(mid)
-        mid += 1
     # bad SOS component id (the reported StopIteration repro)
     bad = bytearray(full_j)
     i = bad.find(b"\xff\xda")
     bad[i + 5] = 0x77
-    rows.append((mid, bytes(bad)))
-    fake_expected.append(mid)
+    cases.append((bytes(bad), True))
+    rows = [(mid, payload) for mid, (payload, _) in enumerate(cases)]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = M.extract_features(df, "payload", "media_id", dim=8).toPandas()
+    got = M.decode_status(df, "payload", "media_id").toPandas()
     assert len(got) == len(rows)  # no task crash, every row answered
-    by_id = got.set_index("media_id")
-    payloads = dict(rows)
-    for mid_ in fake_expected:
-        exp = M._fake_features(payloads[mid_], 8)
-        assert list(by_id.loc[mid_, "feature"]) == pytest.approx(
-            list(exp)
-        ), f"mid={mid_} should have fallen back to the fake"
+    by_id = got.set_index("media_id")["codec"].to_dict()
+    for mid, (_, must_gate) in enumerate(cases):
+        if must_gate:
+            assert by_id[mid] == "gated", f"mid={mid} must not decode"
 
 
 def test_decode_status_all_families(spark):

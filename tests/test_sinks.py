@@ -77,6 +77,32 @@ def test_lookup_key_dtype_mismatch(spark, tmp_path):
     assert vals[7] == 1.0 and vals[9] == 3.0 and len(vals) == 2
 
 
+def test_lookup_with_no_keys_is_empty_with_lookup_columns(spark, tmp_path):
+    """An empty key list answers an empty frame whose columns, types
+    and order match a non-empty lookup (composite keys given in the
+    opposite order to the snapshot's columns)."""
+    now = datetime(2024, 5, 1, 12, 0, 0)
+    pdf = pd.DataFrame(
+        {
+            "a": [1, 2],
+            "b": ["x", "y"],
+            "value": [1.0, 2.0],
+            "ts": [now] * 2,
+            "created_ts": [now] * 2,
+        }
+    )
+    path = str(tmp_path / "online_empty")
+    materialize_online(
+        spark.createDataFrame(pdf), path, ["b", "a"], ["value"], "ts",
+        "created_ts", now - timedelta(hours=1), now,
+    )
+    hit = read_online(spark, path, ["b", "a"], [("y", 2)])
+    assert [tuple(r) for r in hit.collect()] == [("y", 2, 2.0, now, now)]
+    empty = read_online(spark, path, ["b", "a"], [])
+    assert empty.schema == hit.schema
+    assert empty.collect() == []
+
+
 def test_compact_online(spark, tmp_path):
     """Compaction collapses multi-file buckets to one file without
     changing a single row, and point lookups still work."""

@@ -59,108 +59,6 @@ def test_rollup_estimate_within_bound(spark, events):
     assert (rel_err <= 3 * SK.HLL_RSE).all()
 
 
-def test_stream_to_sketches_incremental_equals_batch(spark, tmp_path, events):
-    """Two-micro-batch streaming maintenance of the sketch table must
-    produce IDENTICAL estimates to a one-shot batch build (HLL union
-    associativity), and a full checkpoint-free replay over the same
-    files must leave the table unchanged (idempotent union = the
-    exactly-once story)."""
-    from pyspark.sql import functions as F
-
-    from feast_hive_spark.streaming.events import stream_to_sketches
-
-    src = str(tmp_path / "src")
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    ev.filter(F.dayofmonth("ts") <= 5).coalesce(1).write.parquet(src + "/a")
-    ev.filter(F.dayofmonth("ts") > 5).coalesce(1).write.parquet(src + "/b")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    table = str(tmp_path / "sketches")
-
-    def run(ckpt):
-        q = stream_to_sketches(
-            stream, table, ["event_type"], "ts", "user_id",
-            checkpoint_dir=str(tmp_path / ckpt),
-        )
-        q.awaitTermination(120)
-
-    run("ck1")
-    got = (
-        spark.read.parquet(table)
-        .groupBy("event_type")
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("est")
-        )
-        .toPandas()
-        .set_index("event_type")
-    )
-    direct = (
-        SK.hll_rollup(
-            SK.hll_daily_sketches(ev, ["event_type"], "ts", "user_id"),
-            ["event_type"],
-        )
-        .toPandas()
-        .set_index("event_type")
-    )
-    assert (got.est == direct.approx_distinct.loc[got.index]).all()
-
-    # replay everything with a fresh checkpoint: semantically
-    # idempotent — every (key, day) sketch estimates the same after
-    # re-observing all items (serialized BYTES may differ: DataSketches
-    # re-unioning can switch internal representation, which is why the
-    # exactly-once claim is about estimates, not file bytes)
-    def estimates():
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(table)
-                .select(
-                    "event_type",
-                    "day",
-                    F.hll_sketch_estimate("sketch").alias("est"),
-                )
-                .collect(),
-            )
-        )
-
-    before = estimates()
-    run("ck2")
-    assert estimates() == before
-
-    # crash-window recovery: simulate a process death in the instant
-    # between "live table renamed aside" and "replacement promoted" —
-    # the next upsert must restore the orphaned aside BEFORE merging.
-    # Critically, the next batch is NEW data only (checkpoint ck2 has
-    # already consumed files a and b): without recovery the table
-    # would be rebuilt from this lone micro-batch and the estimates
-    # would collapse.
-    import pathlib
-
-    live = pathlib.Path(table)
-    live.rename(pathlib.Path(table + ".epoch7.old"))
-    assert not live.exists()
-    # 50 already-seen users -> HLL-idempotent, estimates must not move
-    ev.limit(50).coalesce(1).write.parquet(src + "/c")
-    run("ck2")
-    assert estimates() == before
-    assert not pathlib.Path(table + ".epoch7.old").exists()
-
-    # stale-aside cleanup: an aside left AFTER a successful promotion
-    # (crash before rmtree) is dropped, never merged over the live
-    # table
-    import shutil
-
-    shutil.copytree(table, table + ".epoch9.old")
-    ev.limit(10).coalesce(1).write.parquet(src + "/d")
-    run("ck2")
-    assert estimates() == before
-    assert not pathlib.Path(table + ".epoch9.old").exists()
-
-
 def test_cms_one_sided_and_mergeable(spark):
     """CMS invariants: estimates never undercount; a sketch built on
     the union equals the cell-wise SUM of per-partition sketches

@@ -39,34 +39,6 @@ def test_windowed_counts_matches_batch(spark, sf_dir):
     assert (abs(g.sum_value.to_numpy() - e.sum_value.to_numpy()) < 1e-6).all()
 
 
-def test_running_user_totals_stateful(spark, sf_dir):
-    """applyInPandasWithState custom operator: after the single
-    micro-batch, per-user running totals equal the batch aggregation."""
-    stream = SE.read_event_stream(spark, sf_dir)
-    result = SE.running_user_totals(stream)
-    SE.run_to_memory(result, "user_totals", output_mode="update")
-    got = (
-        spark.sql("SELECT * FROM user_totals")
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    ev = read_table(spark, sf_dir, "events")
-    exp = (
-        ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    assert got.user_id.tolist() == exp.user_id.tolist()
-    assert got.n_events.tolist() == exp.n_events.tolist()
-    assert (abs(got.sum_value - exp.sum_value) < 1e-6).all()
-
-
 def test_sessionize(spark, sf_dir):
     stream = SE.read_event_stream(spark, sf_dir)
     result = SE.sessionize(stream, gap="30 minutes", watermark="1 day")
@@ -276,199 +248,6 @@ def test_sessionize_batch_twin_matches_streaming(spark, sf_dir):
     ).all()
     expected_end = batch.session_last_event + timedelta(minutes=30)
     assert (streaming.session_end.to_numpy() == expected_end.to_numpy()).all()
-
-
-def test_sessionize_stateful_event_time_eviction(spark, tmp_path):
-    """Custom applyInPandasWithState sessionizer: an in-batch gap
-    closes a session immediately; an idle key's open session is
-    EVICTED (emitted + state removed) when a later batch's watermark
-    passes its gap - bounded state by construction. Only closed
-    sessions are ever emitted (append contract)."""
-    from datetime import datetime, timedelta
-
-    import pandas as pd
-
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    ckpt = str(tmp_path / "sess_ckpt")
-    out = str(tmp_path / "sess_out")
-    t0 = datetime(2024, 1, 1, 8, 0, 0)
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(rows, columns=["user_id", "value", "ts"])
-        spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(
-            str(src / name)
-        )
-
-    def drain():
-        stream = (
-            spark.readStream.schema("user_id long, value double, ts timestamp")
-            .format("parquet").option("path", f"{src}/*").load()
-            .withWatermark("ts", "1 minute")
-        )
-        q = (
-            SE.sessionize_stateful(stream, gap_seconds=1800)
-            .writeStream.outputMode("append")
-            .format("parquet").option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1: user 1 has session A (2 events) then an in-batch gap
-    # opens session B; user 2 has one open session
-    write_file("f1", [
-        (1, 1.0, t0), (1, 2.0, t0 + timedelta(minutes=10)),
-        (1, 5.0, t0 + timedelta(hours=2)),
-        (2, 7.0, t0 + timedelta(hours=2)),
-    ])
-    drain()
-    got1 = spark.read.parquet(out).toPandas()
-    # only session A is closed; B and user-2's session remain in state
-    assert len(got1) == 1
-    a = got1.iloc[0]
-    assert a.user_id == 1 and a.n_events == 2 and a.sum_value == 3.0
-    assert a.session_start == t0
-    assert a.session_last_event == t0 + timedelta(minutes=10)
-
-    # batch 2: far-future event advances the watermark past both open
-    # sessions' gaps -> event-time timeout evicts and emits them
-    write_file("f2", [(3, 0.5, t0 + timedelta(hours=9))])
-    drain()
-    got2 = spark.read.parquet(out).toPandas().sort_values(
-        ["user_id", "session_start"]
-    ).reset_index(drop=True)
-    assert len(got2) == 3
-    evicted = got2[got2.session_start == t0 + timedelta(hours=2)]
-    assert sorted(evicted.user_id.tolist()) == [1, 2]
-    assert evicted.n_events.tolist() == [1, 1]
-    # user 3's session is still open -> not emitted
-    assert 3 not in got2.user_id.tolist()
-
-
-def test_stream_interval_join_matches_batch(spark, sf_dir):
-    """Stream-stream interval self-join emits exactly the pair set of
-    the equivalent batch range join (single-file source -> one batch,
-    nothing late)."""
-    stream = SE.read_event_stream(spark, sf_dir)
-    joined = SE.stream_interval_join(stream, window_seconds=1800)
-    SE.run_to_memory(joined, "ss_pairs", output_mode="append")
-    got = spark.sql("SELECT probe_id, click_id FROM ss_pairs").toPandas()
-
-    ev = read_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("probe_id"), F.col("ts").alias("p_ts")
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts")
-    )
-    exp = (
-        p.join(
-            c,
-            F.expr(
-                "c_ts BETWEEN p_ts - INTERVAL 1800 SECOND "
-                "AND p_ts + INTERVAL 1800 SECOND"
-            ),
-        )
-        .select("probe_id", "click_id")
-        .toPandas()
-    )
-    assert len(got) == len(exp) > 0
-    assert set(zip(got.probe_id, got.click_id)) == set(
-        zip(exp.probe_id, exp.click_id)
-    )
-
-
-def test_dedup_stream_within_watermark(spark, tmp_path):
-    """Exact duplicates redelivered in a LATER micro-batch must be
-    suppressed by dropDuplicatesWithinWatermark state (idempotent
-    ingest); output keys equal the batch-distinct set."""
-    from datetime import datetime, timedelta
-    from pathlib import Path
-
-    import pandas as pd
-
-    src = tmp_path / "dsrc"
-    src.mkdir()
-    t0 = datetime(2024, 1, 1, 12, 0, 0)
-    rows = pd.DataFrame(
-        {
-            "event_id": list(range(50)),
-            "ts": [t0 + timedelta(minutes=i) for i in range(50)],
-            "value": [float(i) for i in range(50)],
-        }
-    )
-    # batch 1: originals; batch 2: the SAME rows redelivered (plus a
-    # watermark-advancing fresh row so the second file isn't dropped
-    # wholesale by file-source dedup of identical paths)
-    spark.createDataFrame(rows).coalesce(1).write.mode("overwrite").parquet(
-        str(src / "b1")
-    )
-    redelivered = pd.concat(
-        [
-            rows,
-            pd.DataFrame(
-                {
-                    "event_id": [999],
-                    "ts": [t0 + timedelta(minutes=55)],
-                    "value": [999.0],
-                }
-            ),
-        ],
-        ignore_index=True,
-    )
-    spark.createDataFrame(redelivered).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "b2"))
-
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .format("parquet")
-        .option("path", f"{src}/*")
-        .option("maxFilesPerTrigger", 1)  # force per-file micro-batches
-        .load()
-    )
-    out = SE.dedup_stream(stream, ("event_id",), watermark="2 hours")
-    SE.run_to_memory(out, "dedup_stream_sink", output_mode="append")
-    got = spark.sql("SELECT event_id FROM dedup_stream_sink").toPandas()
-
-    assert len(got) == 51  # 50 originals + the fresh row, dups dropped
-    assert got.event_id.is_unique
-    assert set(got.event_id) == set(range(50)) | {999}
-
-
-def test_enrich_stream_matches_batch(spark, sf_dir):
-    from feast_hive_spark.sources.tables import read_table
-    from feast_hive_spark.streaming.events import (
-        enrich_stream,
-        read_event_stream,
-        run_to_memory,
-    )
-
-    cust = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    stream = read_event_stream(spark, sf_dir)
-    out = enrich_stream(stream, cust, "user_id", "c_mktsegment")
-    run_to_memory(out, "enriched", output_mode="complete")
-    got = {
-        (r["window_start"], r["c_mktsegment"]): (r["n_events"], r["sum_value"])
-        for r in spark.table("enriched").collect()
-    }
-    ev = read_table(spark, sf_dir, "events")
-    exp = {
-        (r["ws"], r["c_mktsegment"]): (r["n"], r["s"])
-        for r in ev.join(F.broadcast(cust), "user_id")
-        .groupBy(
-            F.window("ts", "1 day").getField("start").alias("ws"), "c_mktsegment"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("s")
-        )
-        .collect()
-    }
-    assert got == exp and len(got) > 0
 
 
 def test_stream_click_attribution_left_outer(spark, tmp_path):
@@ -684,35 +463,6 @@ def test_topk_from_buckets_finisher(spark):
     ]
     # ties broken by item asc: a(9) before c(9)
     assert got == [("a", 9, 0), ("c", 9, 1), ("b", 7, 2)]
-
-
-def test_stream_near_dup_flags_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-static near-dup (online decontamination): the streaming
-    execution over a file source must emit exactly the pairs the SAME
-    operator computes on a batch input — incl. the stateless
-    first-agreeing-band dedup (no pair emitted twice when several
-    bands collide) — and every flagged arrival must verify at
-    jaccard >= 0.5 against its index match."""
-    from feast_hive_spark.sources.tables import read_table
-    from feast_hive_spark.streaming.events import (
-        run_to_memory,
-        stream_near_dup_flags,
-    )
-
-    docs = read_table(spark, sf_dir, "documents")
-    index = docs.filter(F.col("doc_id") % 2 == 0)
-    exp = sorted(map(tuple, stream_near_dup_flags(docs, index).collect()))
-    assert len(exp) > 0, "planted near-dups must flag"
-    assert len(exp) == len(set(exp)), "band collisions must not dup pairs"
-
-    path = str(tmp_path / "docs_stream")
-    docs.write.parquet(path)
-    stream = spark.readStream.schema(docs.schema).parquet(path)
-    out = stream_near_dup_flags(stream, index)
-    assert out.isStreaming
-    run_to_memory(out, "near_dup_flags")
-    got = sorted(map(tuple, spark.table("near_dup_flags").collect()))
-    assert got == exp
 
 
 def test_stream_pit_probe_matches_batch(spark, sf_dir):

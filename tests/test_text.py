@@ -43,7 +43,7 @@ def test_fingerprint_matches_python(spark, sample):
 
 def test_shingle_hashes_match_python(spark, sample):
     docs, pdf = sample
-    got = docs.select("doc_id", X.shingle_hashes("text").alias("sh")).toPandas()
+    got = docs.select("doc_id", X.shingle_hashes_from(X.tokens_array("text"), 3).alias("sh")).toPandas()
     merged = got.merge(pdf[["doc_id", "text"]], on="doc_id")
     for r in merged.itertuples():
         w = r.text.lower().split()
@@ -60,7 +60,10 @@ def test_shingle_hashes_match_python(spark, sample):
 def test_minhash_signature_matches_python(spark, sample):
     docs, pdf = sample
     sigs = docs.select(
-        "doc_id", X.minhash_signature(X.shingle_hashes("text")).alias("sig")
+        "doc_id",
+        X.minhash_signature(
+            X.shingle_hashes_from(X.tokens_array("text"), 3)
+        ).alias("sig"),
     ).toPandas()
     merged = sigs.merge(pdf[["doc_id", "text"]], on="doc_id")
     for r in merged.itertuples():
