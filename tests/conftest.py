@@ -1,3 +1,4 @@
+import itertools
 import os
 
 import pytest
@@ -59,3 +60,20 @@ def shuffle_records(df) -> list[int]:
 def cached_rdd_ids(spark) -> set:
     """Ids of the RDDs that hold block-manager storage right now."""
     return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+_job_groups = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, #Spark jobs).
+    The group name is never reused: ``id(fn)`` would be, since a bound
+    method's id can recur once the previous one is freed."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{next(_job_groups)}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

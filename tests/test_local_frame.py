@@ -14,6 +14,7 @@ import pytest
 import feast_hive_spark.registry_corpus  # noqa: F401  (registers queries)
 from feast_hive_spark import ckpt, registry
 from feast_hive_spark.plans.local import local_frame
+from conftest import count_jobs
 
 ENGINE = Path(__file__).resolve().parent.parent / "feast_hive_spark"
 
@@ -39,18 +40,6 @@ _ROWS = [
 ]
 
 
-def _jobs(spark, fn):
-    """Run ``fn`` under a fresh job group; return (result, #jobs)."""
-    sc = spark.sparkContext
-    group = f"local_frame_{id(fn)}"
-    sc.setJobGroup(group, "local_frame test")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -62,7 +51,7 @@ def test_local_frame_round_trips_every_type(spark, arrow_conf):
     spark.conf.set(key, arrow_conf)
     try:
         df = local_frame(spark, _ROWS, _DDL)
-        rows, jobs = _jobs(spark, df.collect)
+        rows, jobs = count_jobs(spark, df.collect)
     finally:
         spark.conf.set(key, prev)
     assert jobs == 0
@@ -82,7 +71,7 @@ def test_local_frame_accepts_struct_type_and_empty_rows(spark):
 
     schema = StructType.fromDDL(_DDL)
     empty = local_frame(spark, [], schema)
-    rows, jobs = _jobs(spark, empty.collect)
+    rows, jobs = count_jobs(spark, empty.collect)
     assert rows == [] and jobs == 0
     assert empty.schema == schema
     assert _executed(empty).startswith("LocalTableScan")
@@ -116,12 +105,11 @@ def test_prepared_local_result_survives_checkpoint_release(
 
 
 # the only functions allowed to call createDataFrame: the helper, and
-# the two entity/key ingests on the feature-store path (pandas and
-# pyarrow inputs that carry their own schema)
+# the entity ingest on the feature-store path (pandas and pyarrow
+# inputs that carry their own schema)
 _ALLOWED = {
     ("plans/local.py", "local_frame"),
     ("plans/pit.py", "entity_df_to_spark"),
-    ("sinks.py", "read_online"),
 }
 
 

@@ -87,9 +87,16 @@ def test_stream_to_online_snapshot(spark, sf_dir, tmp_path):
     assert got.user_id.tolist() == exp.user_id.tolist()
     assert (got.ts.to_numpy() == exp.ts.to_numpy()).all()
 
-    keys = got.user_id.tolist()[:3]
-    looked = read_online(spark, path, ["user_id"], [(k,) for k in keys])
-    assert sorted(looked.toPandas().user_id.tolist()) == sorted(keys)
+    # every key answers, with the snapshot's row
+    keys = got.user_id.tolist()
+    looked = (
+        read_online(spark, path, ["user_id"], [(k,) for k in keys])
+        .toPandas()
+        .sort_values("user_id")
+        .reset_index(drop=True)
+    )
+    assert looked.user_id.tolist() == keys
+    assert (looked.ts.to_numpy() == got.ts.to_numpy()).all()
 
 
 def test_stream_to_online_incremental_buckets(spark, tmp_path):
